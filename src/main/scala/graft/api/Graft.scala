@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 import graft.Exact.h60
+import graft.functions.MinHashSig.minhash
 import graft.functions.VectorFunctions.cosine
 
 /** The engine's user-facing library surface: every pipeline operator as a
@@ -42,9 +43,10 @@ object Graft {
     def loopCheckpoint(): DataFrame = ck(df)
   }
 
-  /** lower-cased whitespace tokens, empties dropped */
+  /** lower-cased whitespace tokens, empties dropped (lambda-free: no
+    * interpreted higher-order function per row) */
   def tokens(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => t =!= "")
+    array_remove(split(lower(c), "\\s+"), "")
 
   /** RE2-safe content-filter patterns — ONE definition feeds the Spark
     * predicates AND (interpolated) the DuckDB oracles of every query
@@ -105,30 +107,70 @@ object Graft {
     if (dedup) raw.distinct() else raw
   }
 
-  /** MinHash LSH band keys from an exploded `(doc_id, shingle)` relation
-    * (distinct per pair): `bands` rows per doc of `(doc_id, band,
-    * bandkey)`, where bandkey is the md5 of that band's signature slice.
-    * Two docs sharing any (band, bandkey) are LSH candidates. This is the
-    * shared index kernel: [[minhashPairs]] self-joins it for offline
-    * dedup; ingest-time filters build it ONCE over the corpus and
+  /** distinct word 3-gram shingle ARRAYS per doc: one `(doc_id,
+    * shingles)` row per distinct id (docs with < 3 tokens drop) — the
+    * per-document relation the MinHash kernel reads. Shingles stay in
+    * the row: no explode, no per-(doc, shingle) distinct. An id spread
+    * over several rows is merged by ONE groupBy over those rows (union
+    * of their arrays), so the set is exactly the oracle's `DISTINCT
+    * doc_id, shingle` whatever the input's id discipline.
+    *
+    * The merge's doc_id exchange runs BEFORE the shingling, so it both
+    * fans the CPU-bound map side out over every shuffle partition (a
+    * single-row-group file is otherwise one scan task) and leaves the
+    * merge partition-local: one exchange, and it carries text rather
+    * than the ~3x larger shingle arrays. Its partition count is fixed
+    * at `spark.sql.shuffle.partitions`: a by-column repartition of a
+    * few MB is one AQE would coalesce back into a single task.
+    *
+    * The windows are cut lambda-free: the [[tokens]] of the text joined
+    * by single spaces, then one regex pass that captures 3 tokens ahead
+    * of every token start — the same strings [[shingleSet]] builds with
+    * `transform(slice)` (asserted in DedupSimilaritySpec), without its
+    * interpreted per-window lambda. A doc with fewer than 3 tokens has no
+    * match, so dropping empty arrays is the `size(tokens) >= 3` filter. */
+  def shingleArrays(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val joined = concat_ws(" ", tokens(col("text")))
+    val window = "(?:^| )(?=([^ ]+(?: [^ ]+){2}))"
+    // the empty-array filter sits ABOVE the merge: below it, the
+    // optimizer would push the whole regex under the exchange, into the
+    // scan, and evaluate it twice
+    docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+      .repartition(parts, col("doc_id"))
+      .select(col("doc_id"), regexp_extract_all(joined, lit(window), lit(1)).as("shingles"))
+      .groupBy("doc_id")
+      .agg(array_distinct(flatten(collect_list(col("shingles")))).as("shingles"))
+      .filter(size(col("shingles")) > 0)
+  }
+
+  /** MinHash LSH band keys from the per-document [[shingleArrays]]
+    * relation: `bands` rows per doc of `(doc_id, band, bandkey)`, where
+    * bandkey is the md5 of that band's signature slice and the signature
+    * is the native row-local [[graft.functions.MinHashSig]] kernel. Two
+    * docs sharing any (band, bandkey) are LSH candidates. This is the
+    * shared index kernel: [[minhashPairs]] self-joins the same keys for
+    * offline dedup; ingest-time filters build it ONCE over the corpus and
     * semi-join each arriving batch against it. Portable md5-60 hashes —
     * an oracle can restate every value exactly. */
-  def minhashBandKeys(sh: DataFrame, numHashes: Int = 16,
-      bands: Int = 4): DataFrame = {
+  def minhashBandKeys(docs: DataFrame, numHashes: Int = 16,
+      bands: Int = 4): DataFrame =
+    // posexplode the key EXPRESSION, not a `keys` column: over a column
+    // the optimizer infers `size(keys) > 0` and pushes it down through
+    // the projections, inlining the signature into that filter once per
+    // band-key element (17 MinHashSig calls per doc; q_stream_neardup
+    // ran 2x slower)
+    docs.withColumn("sig", minhash(col("shingles"), numHashes))
+      .select(col("doc_id"),
+        posexplode(bandKeys(col("sig"), numHashes, bands)).as(Seq("band", "bandkey")))
+
+  /** the `bands` band keys of signature `sig`: md5 of each band's slice */
+  private def bandKeys(sig: Column, numHashes: Int, bands: Int): Column = {
     val rows = numHashes / bands
     require(bands * rows == numHashes, "bands must divide numHashes")
-    val hx = md5(col("shingle"))
-    val ha = conv(substring(hx, 1, 15), 16, 10).cast("long")
-    val hb = conv(substring(hx, 16, 15), 16, 10).cast("long") % lit(1L << 56)
-    val sig = sh.select(col("doc_id"), ha.as("ha"), hb.as("hb"))
-      .groupBy("doc_id").agg(
-        array((0 until numHashes).map(i =>
-          min((col("ha") + lit(i.toLong) * col("hb")) % lit(1L << 60))): _*).as("sig"))
-    sig.select(col("doc_id"), posexplode(
-      array((0 until bands).map(bIdx =>
-        md5(concat_ws(",", (0 until rows).map(r =>
-          element_at(col("sig"), bIdx * rows + r + 1).cast("string")): _*))): _*))
-      .as(Seq("band", "bandkey")))
+    array((0 until bands).map(bIdx =>
+      md5(concat_ws(",", (0 until rows).map(r =>
+        element_at(sig, bIdx * rows + r + 1).cast("string")): _*))): _*)
   }
 
   /** Exact n-gram Jaccard pairs >= `threshold` via the inverted shingle
@@ -148,51 +190,54 @@ object Graft {
   }
 
   /** MinHash signatures (Kirsch-Mitzenmacher from one md5 per shingle) +
-    * LSH band buckets + exact-Jaccard verification of candidates.
+    * LSH band buckets + exact-Jaccard verification of candidates, all
+    * over the per-document [[shingleArrays]] relation.
     *
-    * Formulation note (measured r7): an all-in-row variant — per-doc
-    * shingle ARRAYS with signatures via `transform` + `array_min`, no
-    * explode, zero pre-band shuffles — was built and REJECTED: 8.4 s vs
-    * 1.4 s warm at sf0.1. Spark evaluates higher-order-function lambdas
-    * interpreted (outside whole-stage codegen), and the k per-hash
-    * `array_min(transform(...))` projections re-evaluate the md5
-    * transform per hash row, so the shuffle it saves is repaid ~6x in
-    * CPU. The exploded relation below shuffles (doc_id, ha, hb) = ~24
-    * bytes/row into a fully codegen'd min-aggregate — cheaper at every
-    * scale where CPU, not network, is the dedup bottleneck. */
-  def minhashPairs(shRaw: DataFrame, threshold: Double,
+    * Formulation note: everything up to the candidate join is
+    * ROW-LOCAL — each doc's shingle array and its signature (the native
+    * [[graft.functions.MinHashSig]] kernel, one md5 per shingle) are
+    * computed inside the row. The earlier shape exploded one row per
+    * shingle, distincted `(doc_id, shingle)` and regrouped on doc_id to
+    * min-aggregate the signatures; an all-in-row variant built from
+    * higher-order functions lost to it 8.4 s vs 1.4 s (r7: interpreted
+    * lambdas re-evaluating the md5 per hash), but the native kernel has
+    * no lambdas, and the shingle windows are cut by one regex pass
+    * rather than a lambda. Measured on the 8,000-doc stretch16 corpus
+    * (perfbench `corpus`, 4 cores, 10 alternating pairs) against the
+    * exploded shape: 2.81 -> 0.90 s median per q_dedup_minhash, 8 -> 7
+    * jobs, 27 -> 20 tasks, 20.8 -> 1.5 MB of shuffle, the same 432 rows. */
+  def minhashPairs(docsRaw: DataFrame, threshold: Double,
       numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    // The shingle set feeds TWO branches (signatures and the per-doc
-    // shingle arrays the verify step intersects); without materialization
-    // each branch re-scans the corpus and re-explodes shingles.
-    // localCheckpoint also truncates lineage, so the verify join's plan
-    // stays shallow. At cluster scale this is the standard "build the
-    // index once" step — storage is the distinct shingle list (keys),
-    // never documents.
-    val sh = shRaw.localCheckpoint()
-    val banded = minhashBandKeys(sh, numHashes, bands)
+    // The per-doc arrays feed TWO branches (band keys and the verify
+    // intersection); without materialization each branch re-scans and
+    // re-tokenizes the corpus. The band keys are computed before the
+    // checkpoint, in the same parallel pass as the shingles, so each
+    // signature is hashed once rather than on both sides of the band
+    // self-join. localCheckpoint also truncates lineage, so the verify
+    // join's plan stays shallow.
+    val docs = docsRaw.select(col("doc_id"), col("shingles"),
+        minhash(col("shingles"), numHashes).as("sig"))
+      .withColumn("keys", bandKeys(col("sig"), numHashes, bands))
+      .drop("sig")
+      .localCheckpoint()
+    val banded = docs.select(col("doc_id"),
+      posexplode(col("keys")).as(Seq("band", "bandkey")))
     val cand = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bandkey") === col("y.bandkey")
           && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
       .distinct()
-    // Exact-Jaccard verify on the candidates: one groupBy collapses the
-    // shingle table to a per-doc shingle array (bounded by document
-    // length, so the row stays small at any corpus scale), then the
-    // intersection is computed IN-ROW with array_intersect. This replaces
-    // the earlier formulation — exploding every candidate pair back
-    // against the shingle table and re-counting matches — which shuffled
-    // the full shingle relation twice more (on i, then on (j, shingle));
-    // now the only post-candidate shuffles carry the candidate list
-    // itself. `sh` is distinct per (doc_id, shingle), so
-    // size(array_intersect) is exactly |A ∩ B|.
-    val docSets = sh.groupBy("doc_id").agg(
-      collect_list(col("shingle")).as("shset"), count(lit(1)).as("c"))
+    // Exact-Jaccard verify on the candidates: the intersection is
+    // computed IN-ROW with array_intersect over the same per-doc arrays,
+    // so the only post-candidate shuffles carry the candidate list
+    // itself. The arrays are distinct per doc, so size(array_intersect)
+    // is exactly |A ∩ B|.
+    def side(id: String, sh: String, c: String): DataFrame =
+      docs.select(col("doc_id").as(id), col("shingles").as(sh),
+        size(col("shingles")).cast("long").as(c))
     cand
-      .join(docSets.select(col("doc_id").as("i"),
-        col("shset").as("sa"), col("c").as("ca")), "i")
-      .join(docSets.select(col("doc_id").as("j"),
-        col("shset").as("sb"), col("c").as("cb")), "j")
+      .join(side("i", "sa", "ca"), "i")
+      .join(side("j", "sb", "cb"), "j")
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
       .withColumn("jac", col("inter").cast("double") / (col("ca") + col("cb") - col("inter")))
       .filter(col("jac") >= threshold)

@@ -102,7 +102,6 @@ object TextAnalysis {
          |        list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS toks
          |      FROM documents)
          |""".stripMargin) { (s, d) =>
-      val stopArr = stopwords.map(lit)
       documents(s, d)
         .select(col("doc_id"), col("lang"), tokens(col("text")).as("toks"))
         .withColumn("stop_ratio",

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 
 /** Typed bounded-top-k aggregator: keeps at most k records per group in
   * the aggregation buffer, ordered by a caller-supplied key.

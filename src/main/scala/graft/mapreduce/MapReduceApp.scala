@@ -1,7 +1,6 @@
 package graft.mapreduce
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Typed MapReduce application surface — the reference's core extension

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.sql.Column
 import graft.QueryDef
 import graft.operators.Sketches
 import graft.sources.Tables._

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.QueryDef
@@ -16,8 +15,11 @@ import graft.sources.Tables._
   *  - embedding:      sign-LSH buckets + cosine verify (see Similarity)
   *
   * Scale design: every variant shuffles keys/signatures (bytes), never
-  * documents; candidate generation is equi-join-able so AQE can handle
-  * skewed hot buckets (hot shingles are additionally length-banded).
+  * documents — except MinHash, which moves each document's text once,
+  * keyed by doc_id, so its shingles and signature can be built in-row
+  * (that text is ~3x smaller than the shingle rows it replaces);
+  * candidate generation is equi-join-able so AQE can handle skewed hot
+  * buckets (hot shingles are additionally length-banded).
   */
 object Dedup {
 
@@ -109,7 +111,8 @@ object Dedup {
     // candidates only. Signatures/band keys are portable md5-60 hashes, so
     // the oracle mirrors candidate generation EXACTLY (same sigs, same
     // band buckets, same verify) — hash-checked, not rows-only. At scale:
-    // signature build is one pass + groupBy doc; candidates come from
+    // signatures are built row-locally (per-doc shingle arrays + the
+    // native MinHashSig kernel, no shingle explode); candidates come from
     // equi-joins on (band, bandkey).
     QueryDef(
       "q_dedup_minhash",
@@ -148,7 +151,7 @@ object Dedup {
         |WHERE CAST(n AS DOUBLE) / (ca.c + cb.c - n) >= 0.5
         |""".stripMargin) { (s, d) =>
       graft.api.Graft.minhashPairs(
-        shingles(s, d).select("doc_id", "shingle"), threshold = 0.5)
+        graft.api.Graft.shingleArrays(documents(s, d), "doc_id", "text"), threshold = 0.5)
     },
 
     // Dedup clusters: connected components over the minhash pair list —
@@ -215,9 +218,8 @@ object Dedup {
              |  FROM p$k p JOIN p$k q ON q.v = p.l)""".stripMargin
         }.mkString(",\n") +
         "\nSELECT v AS doc_id, l AS cluster_id FROM l12\n") { (s, d) =>
-      graft.api.Graft.dedupClusters(
-        graft.api.Graft.minhashPairs(
-          shingles(s, d).select("doc_id", "shingle"), threshold = 0.5))
+      graft.api.Graft.dedupClusters(graft.api.Graft.minhashPairs(
+        graft.api.Graft.shingleArrays(documents(s, d), "doc_id", "text"), threshold = 0.5))
     },
 
     // SimHash-60 near-dup: tf-weighted sign sketch over portable md5-60

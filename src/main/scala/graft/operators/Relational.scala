@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.Column
 import graft.QueryDef
 import graft.sources.Tables._

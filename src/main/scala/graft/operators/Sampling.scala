@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Exact.h60
 import graft.QueryDef
 import graft.operators.Sketches
 import graft.sources.Tables._
@@ -819,7 +818,7 @@ WHERE user_id >= 100 AND user_id < 200 AND event_id % 29 <> 0
       // fragmented seed, then CLUSTER BY user_id: files become
       // key-disjoint with recorded user_id bounds — the layout that
       // makes the next merge's rewrite set small
-      val v1 = Snapshots.commit(s, dir, base.repartition(8), "part",
+      Snapshots.commit(s, dir, base.repartition(8), "part",
         statsColumns = Seq("user_id"))
       val v2 = Snapshots.optimize(s, dir, "part",
         targetFileBytes = 1L << 20, clusterBy = Seq("user_id"))
@@ -1939,9 +1938,10 @@ FROM surv GROUP BY 1, 2
     //    es 0.25x / zh 0.1x epoch rates (hash-fractional copies);
     //  - pack: copies lay end-to-end per hash bucket, cut at 256.
     //
-    // Scale shape: ids and 16-byte digests shuffle, documents never do
-    // (the dedup/decontamination joins are semi/anti on keys, eval
-    // grams broadcast); the only windows are the per-class budget
+    // Scale shape: ids and 16-byte digests shuffle; the only text that
+    // moves is each exact-dedup survivor's, once, keyed by doc_id into
+    // the row-local MinHash kernel (the dedup/decontamination joins are
+    // semi/anti on keys, eval grams broadcast); the only windows are the per-class budget
     // cumsum and the per-bucket pack cumsum, both partitioned by their
     // scale-out key. Each stage's plan is the one its standalone query
     // pins in PLANS.md.
@@ -2047,7 +2047,7 @@ FROM packed
       import graft.api.Graft
       val docs = documents(s, d)
       // per-doc attrs, text-free — one tokenize pass, then only ids and
-      // digests move through the dedup stages
+      // digests move through the exact-dedup stage
       val base = docs.select(col("doc_id"), col("lang"),
           size(Graft.tokens(col("text"))).cast("long").as("n_tokens"),
           length(col("text")).as("n_chars"),
@@ -2056,7 +2056,7 @@ FROM packed
         .localCheckpoint()
       val keepEx = base.groupBy("fp").agg(min("doc_id").as("doc_id")).select("doc_id")
       val exDocs = docs.join(keepEx, Seq("doc_id"), "left_semi")
-      val pairs = Graft.minhashPairs(Graft.shingleSet(exDocs, "doc_id", "text"),
+      val pairs = Graft.minhashPairs(Graft.shingleArrays(exDocs, "doc_id", "text"),
         threshold = 0.5)
       val nearIds = keepEx
         .join(pairs.select(col("j").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")

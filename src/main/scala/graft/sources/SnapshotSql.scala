@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -237,7 +237,6 @@ private[graft] object SnapshotSql {
       case Seq(DeleteAction(c)) => (Some(c), false)
       case other => refuse(s"unreachable: $other")
     }
-    val hasInsert = m.notMatchedActions.nonEmpty
     val source = Bridge.ofRows(s, m.sourceTable)
     // op per source row: delete-condition rows -> 'D'; the rest -> 'U'
     // (full upsert) or dropped (DELETE-only merge folds deletions alone).

@@ -3833,7 +3833,6 @@ object Snapshots {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
     def unsignedLt(a: Array[Byte], b: Array[Byte]): Boolean = {
       var i = 0

@@ -12,72 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** Recover scan parallelism lost to UNSPLITTABLE inputs (optimization
-    * guide §2.5, "input skew ... one huge unsplittable file: repartition
-    * immediately after the read"). The driver's fixture tables are
-    * single-row-group parquet files, and a parquet row group is the
-    * reader's minimum split — so a bare scan plans ONE input partition
-    * and every pipelined map-side step (tokenize, explode, hashing,
-    * partial aggregation) runs on ONE core at any local[N] (measured
-    * r18: the 15-sum decimal aggregate of q_quality_corr saturated a
-    * single task while 31 cores idled).
-    *
-    * Posture (r19, reversing r18): OPT-IN PER CALL SITE, default OFF.
-    * r18 shipped this on-by-default for every read ≥256 KiB and the
-    * blanket round-robin exchange taxed ~50 cheap single-pass queries
-    * (+17 s beyond box weather in the driver's own low-load run —
-    * q_sort_limit shuffled all of orders before a top-10, q_scalar_math
-    * paid +0.6 s to project lineitem). The exchange only pays for
-    * itself where the map side above the scan is measurably CPU-bound;
-    * those call sites pass `fanOut = true` (each cites its A/B). The
-    * `spark.graft.scan.parallelize` conf remains as a global override
-    * for experiments (unset → call-site choice; true/false → force).
-    *
-    * Scale posture: at production scale inputs carry many row groups,
-    * `parts * 2 > cores` holds, and even opted-in reads stay
-    * zero-shuffle — the heuristic only fires where the alternative is
-    * a serial map side. `spark.graft.scan.parallelizeMinBytes`
-    * (default 256 KiB) keeps broadcast-sized tables out.
-    *
-    * Determinism: every registry query is partition-layout-independent
-    * by repo discipline (portable h60 hashing, exact decimal sums,
-    * fully tie-broken windows), so round-robin placement cannot perturb
-    * any result — re-verified against the full DuckDB oracle. */
-  private def scanParallel(spark: SparkSession, df: DataFrame,
-      sizeBytes: Long, fanOut: Boolean): DataFrame = {
-    val on = spark.conf.getOption("spark.graft.scan.parallelize")
-      .flatMap(_.toBooleanOption).getOrElse(fanOut)
-    val minBytes = spark.conf.getOption("spark.graft.scan.parallelizeMinBytes")
-      .map(_.toLong).getOrElse(256L << 10)
-    if (!on || sizeBytes < minBytes) df
-    else {
-      val cores = spark.sparkContext.defaultParallelism
-      val parts = df.rdd.getNumPartitions
-      if (parts * 2 > cores) df else df.repartition(cores)
-    }
-  }
-
-  /** On-disk bytes of a parquet path: file length, or the sum of
-    * part-file lengths when the path is a directory (the standard
-    * Spark-written layout — a bare File.length() there reads ~4 KiB
-    * and would silently disable the fan-out heuristic). */
-  private def parquetBytes(path: String): Long =
-    try {
-      val f = new java.io.File(path)
-      if (f.isDirectory)
-        f.listFiles().iterator.filter(_.isFile)
-          .filterNot(_.getName.startsWith("_")).map(_.length()).sum
-      else f.length()
-    } catch { case _: Throwable => 0L }
-
-  def table(spark: SparkSession, dir: String, name: String,
-      fanOut: Boolean = false): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
-    if (!fanOut &&
-        spark.conf.getOption("spark.graft.scan.parallelize").isEmpty) df
-    else scanParallel(spark, df, parquetBytes(path), fanOut)
-  }
+  /** A bare parquet read. The fixture tables are single-row-group
+    * files and a row group is the reader's minimum split, so such a
+    * scan is ONE task. It stays that way: a round-robin exchange under
+    * every larger read taxed ~50 cheap single-pass queries (r18), and at
+    * the one CPU-bound read measured with it — the MinHash documents
+    * read on the 8,000-doc stretch16 corpus, local[4], AQE, median of 13
+    * interleaved reps in one JVM — it ran 0.96 s per query against
+    * 1.12 s for the bare scan but 0.80 s for the doc_id exchange that
+    * query needs anyway, moved below its CPU-bound map side (see
+    * [[graft.api.Graft.shingleArrays]]). */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.parquet(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

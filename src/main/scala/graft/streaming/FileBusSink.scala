@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 /** PRODUCER side of the [[FileBus]] — the write half of the Kafka
   * contract, as a DataSource V2 sink (batch `BATCH_WRITE` + streaming

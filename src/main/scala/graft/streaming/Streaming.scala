@@ -488,7 +488,7 @@ object Streaming {
   private[graft] def streamEwmaCounted(s: SparkSession, d: String,
       batches: Int = 1): (DataFrame, Int) = withStatePartitions(s, 4) {
     import s.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val topic = FileBusFixture.ensureKeyedTopic(s, d)
     val total = FileBus.endOffsets(topic).values.sum
     val cap = math.max(1L, total / batches + 1L)
@@ -1526,14 +1526,16 @@ object Streaming {
     *
     * Scale shape: at 100 TB the index is bands x |corpus| short rows
     * (hashes, never documents) — bucket-joinable, AQE-skew-splittable;
-    * arriving docs shuffle only their own (doc_id, ha, hb) triples for
-    * the per-batch signature aggregate. Docs too short to shingle (<3
-    * tokens) have no bands and pass through, stated in the oracle. */
+    * arriving docs compute their signatures in-row (the native
+    * MinHashSig kernel) after one doc_id exchange of their own text
+    * (the [[graft.api.Graft.shingleArrays]] merge). Docs too short to
+    * shingle (<3 tokens) have no bands and pass through, stated in the
+    * oracle. */
   def streamNearDup(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
     import graft.api.Graft
     val docs = graft.sources.Tables.documents(s, d)
     val corpusIdx = Graft.minhashBandKeys(
-        Graft.shingleSet(docs.filter(col("doc_id") % 3 === 0), "doc_id", "text"))
+        Graft.shingleArrays(docs.filter(col("doc_id") % 3 === 0), "doc_id", "text"))
       .select("band", "bandkey").distinct().localCheckpoint()
     val kept = new BatchAcc[DataFrame](null)
     val q = s.readStream.schema(docs.schema)
@@ -1541,7 +1543,7 @@ object Streaming {
       .filter(col("doc_id") % 3 =!= 0)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hit = Graft.minhashBandKeys(Graft.shingleSet(batch, "doc_id", "text"))
+        val hit = Graft.minhashBandKeys(Graft.shingleArrays(batch, "doc_id", "text"))
           .join(corpusIdx, Seq("band", "bandkey"), "left_semi")
           .select("doc_id").distinct()
         val keep = batch.select("doc_id").join(hit, Seq("doc_id"), "left_anti")

@@ -23,7 +23,7 @@ object Plans {
     "q_window_topk" ->
       "ranking window partitioned by the group key — one exchange, state stays per-key",
     "q_dedup_minhash" ->
-      "signatures (bytes) shuffle, never documents; candidates from equi-joins on (band, key)",
+      "row-local MinHash: each doc's text shuffles ONCE on doc_id (fanning the shingling out over every partition and making the exact doc_id merge partition-local), its shingle array, 16-way signature (native minhashsig) and band keys are computed in-row in the checkpointed build pass below the Scan ExistingRDD (plans/minhash_rowlocal shows it) — no shingle explode, no (doc_id, shingle) aggregate; candidates from equi-joins on (band, key), verify by in-row array_intersect",
     "q_knn_brute" ->
       "query set broadcast against the corpus scan; native codegen cosine in the project",
     "q_sample_systematic" ->
@@ -173,7 +173,7 @@ object Plans {
     "q_graph_modularity" ->
       "modularity: two node-sized label joins onto the checkpointed edge list, map-side-combined per-community aggregates, 1-row totals crossed back by broadcast",
     "q_pipeline_corpus" ->
-      "end-to-end corpus build: ids and digests shuffle, documents never do — dedup/decontamination joins are key-only semi/anti joins (eval grams broadcast), the only windows are the per-class budget cumsum and per-bucket pack cumsum, each partitioned by its scale-out key",
+      "end-to-end corpus build: ids and digests shuffle; the only text that moves is each exact-dedup survivor's, once, on doc_id into the row-local MinHash kernel — dedup/decontamination joins are key-only semi/anti joins (eval grams broadcast), the only windows are the per-class budget cumsum and per-bucket pack cumsum, each partitioned by its scale-out key",
     "q_graph_louvain" ->
       "Louvain refinement: per sweep one edge-sized k_vc equi-join + node-sized deg/tot joins + a node-partitioned argmax; the Q accept gate is an in-plan 1-row broadcast — per-sweep plans read checkpointed labels, never prior sweeps' lineage",
     "q_text_perplexity" ->

@@ -1,14 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Column <-> Expression bridge. Spark 4 made the converters
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`), so this

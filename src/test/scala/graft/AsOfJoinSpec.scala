@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.functions._
 
 /** As-of join semantics on literal frames: latest right row with
   * ts <= left.ts per key; equal-ts right rows visible; null when none. */

@@ -27,6 +27,97 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  /** the exploded Column formula the MinHashSig kernel replaced, kept
+    * here as the reference it must match bit for bit: one md5 per
+    * distinct (doc, shingle) row, then a per-doc min per hash slot */
+  private def formulaSigs(sh: org.apache.spark.sql.DataFrame,
+      numHashes: Int): Map[Long, Seq[Long]] = {
+    val hx = md5(col("shingle"))
+    val ha = conv(substring(hx, 1, 15), 16, 10).cast("long")
+    val hb = conv(substring(hx, 16, 15), 16, 10).cast("long") % lit(1L << 56)
+    sh.select(col("doc_id"), ha.as("ha"), hb.as("hb"))
+      .groupBy("doc_id").agg(array((0 until numHashes).map(i =>
+        min((col("ha") + lit(i.toLong) * col("hb")) % lit(1L << 60))): _*).as("sig"))
+      .as[(Long, Seq[Long])].collect().toMap
+  }
+
+  /** edge-case corpus for the row-local kernel: non-ASCII text, a
+    * shingle repeated inside one doc, a doc under 3 tokens, null text,
+    * one doc_id on two rows with different text, and ragged whitespace */
+  private def edgeDocs = Seq[(Long, String)](
+    (1L, "Grüße aus Köln — 東京 タワー ünïcödé straße Grüße aus Köln"),
+    (2L, "the cat sat on the mat the cat sat on the mat again"),
+    (3L, "too short"),
+    (4L, null),
+    (5L, "first row of five with its own words"),
+    (5L, "second row of five shares only row of five"),
+    (6L, "  Leading\tand   trailing \n whitespace   collapses  ")
+  ).toDF("doc_id", "text")
+
+  test("shingleArrays holds exactly the exploded distinct shingle sets") {
+    // the regex windows must reproduce transform(slice) shingling string
+    // for string — including the merge of doc 5's two rows and the drop
+    // of docs 3 (< 3 tokens) and 4 (null text)
+    val arrays = graft.api.Graft.shingleArrays(edgeDocs, "doc_id", "text")
+      .as[(Long, Seq[String])].collect()
+    val exploded = graft.api.Graft.shingleSet(edgeDocs, "doc_id", "text")
+      .as[(Long, String)].collect().groupBy(_._1)
+      .map { case (k, v) => k -> v.map(_._2).toSet }
+    assert(arrays.map(_._1).sorted.toSeq == Seq(1L, 2L, 5L, 6L))
+    arrays.foreach { case (id, sh) =>
+      assert(sh.distinct.size == sh.size, s"doc $id array not distinct: $sh")
+      assert(sh.toSet == exploded(id), s"doc $id: $sh vs ${exploded(id)}")
+    }
+  }
+
+  test("MinHashSig: interpreted eval, codegen and the Column formula agree") {
+    import graft.functions.MinHashSig
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val truth = formulaSigs(
+      graft.api.Graft.shingleSet(edgeDocs, "doc_id", "text"), 16)
+    val docs = graft.api.Graft.shingleArrays(edgeDocs, "doc_id", "text")
+    def sigs(conf: (String, String)*): Map[Long, Seq[Long]] = {
+      val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try docs.select(col("doc_id"), MinHashSig.minhash(col("shingles"), 16))
+        .as[(Long, Seq[Long])].collect().toMap
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    // codegen only: a generated class that fails to compile throws here
+    // instead of silently falling back to the interpreted path
+    val codegen = sigs("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = sigs("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    assert(truth.keySet == Set(1L, 2L, 5L, 6L))
+    assert(codegen == truth, s"codegen $codegen\nformula $truth")
+    assert(interpreted == truth, s"interpreted $interpreted\nformula $truth")
+    // direct eval: duplicates and null elements do not move a slot, and
+    // nothing to hash (null input, empty or all-null array) is null
+    val arrTy = ArrayType(StringType, containsNull = true)
+    def eval(v: Array[String]): Seq[Long] =
+      Option(MinHashSig(Literal.create(v, arrTy), 16).eval(null))
+        .map(_.asInstanceOf[ArrayData].toLongArray().toSeq).orNull
+    docs.as[(Long, Seq[String])].collect().foreach { case (id, sh) =>
+      assert(eval((sh ++ sh.take(2) :+ null).toArray) == truth(id), s"doc $id")
+    }
+    assert(eval(null) == null && eval(Array()) == null &&
+      eval(Array[String](null)) == null)
+    // doc 5's two rows hash separately and merge by element-wise min
+    val rowSigs = edgeDocs.filter(col("doc_id") === 5L).as[(Long, String)]
+      .collect().toSeq.map { row =>
+        eval(graft.api.Graft.shingleArrays(Seq(row).toDF("doc_id", "text"),
+          "doc_id", "text").as[(Long, Seq[String])].head()._2.toArray)
+      }
+    assert(rowSigs.size == 2 &&
+      rowSigs(0).zip(rowSigs(1)).map { case (a, b) => math.min(a, b) } == truth(5L))
+  }
+
   test("exact-jaccard query pairs are symmetric-free and above threshold") {
     val rows = q("q_dedup_ngram_jaccard").collect()
     rows.foreach { r =>

@@ -93,8 +93,8 @@ class GraftApiSpec extends SparkSpec {
   }
 
   test("minhashPairs finds the near-dup pair and verifies its jaccard") {
-    val sh = Graft.shingleSet(corpus, "id", "body")
-    val pairs = Graft.minhashPairs(sh, threshold = 0.5)
+    val docs = Graft.shingleArrays(corpus, "id", "body")
+    val pairs = Graft.minhashPairs(docs, threshold = 0.5)
       .select("i", "j").as[(Long, Long)].collect().toSet
     assert(pairs.contains((10L, 11L)), s"exact dup pair, got $pairs")
     pairs.foreach { case (i, j) => assert(i < j) }

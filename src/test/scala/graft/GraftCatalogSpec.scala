@@ -112,7 +112,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("Snapshots.sql accepts the catalog name addressing for DML and DDL") {
-    val dir = seed("db3", "t3")
+    seed("db3", "t3")
     // DELETE by name == DELETE by path (kernel identity)
     val v = Snapshots.sql(spark,
       "DELETE FROM graft.db3.t3 WHERE k <= 20").as[Long].head()
@@ -148,7 +148,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("CREATE TABLE PARTITIONED BY (day, region) — typed multi-column identity through DDL") {
-    val dir = s"$wh/db6/t6" // touch wh first: registers the catalog conf
+    locally(wh) // touch wh first: registers the catalog conf
     spark.sql("CREATE TABLE graft.db6.t6 " +
       "(day DATE, region STRING, k BIGINT, v BIGINT) " +
       "PARTITIONED BY (day, region)")

@@ -2,7 +2,6 @@ package graft
 
 import graft.api.Graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.functions._
 
 /** The community loops' convergence ledger (r12): once the loop reaches
   * a fixed point, the remaining fixed-`rounds` sweeps must be runtime

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Contracts of the pattern-mining trio beyond the oracle's exact
   * replay: pair canonicalization and support threshold, association-rule

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Tables
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -87,6 +86,55 @@ class PlanShapeSpec extends SparkSpec {
     // a projection over per-doc arrays
     val p = planString("q_dedup_minhash")
     assert(p.contains("array_intersect"), p)
+  }
+
+  test("minhash signatures are row-local: native kernel, no (doc_id, shingle) aggregate") {
+    // the per-doc arrays are built and checkpointed in their own action,
+    // so pin the plans of EVERY action the query runs, not only its last
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      planString("q_dedup_minhash")
+      // the listener bus is async: wait for the checkpoint and the collect
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size >= 2, s"saw ${plans.size} executions")
+    def expand(sp: SparkPlan): Seq[SparkPlan] = sp match {
+      case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => expand(q.plan)
+      case other => other +: other.children.flatMap(expand)
+    }
+    val nodes = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(expand)
+    assert(nodes.exists(_.expressions.exists(_.toString.contains("minhashsig("))),
+      "signature must come from MinHashSig:\n" + nodes.map(_.verboseString(200)).mkString("\n"))
+    val keyed = nodes.collect {
+      case a: BaseAggregateExec => a.groupingExpressions.map(_.toString.toLowerCase)
+    }
+    assert(keyed.nonEmpty, "expected the doc_id merge and candidate aggregates")
+    keyed.foreach(keys => assert(!keys.exists(_.contains("shingle")),
+      s"aggregate keyed on a shingle column: $keys"))
+  }
+
+  test("minhash band keys evaluate each document's signature once") {
+    // a generator filter inferred on a `keys` column and pushed down
+    // through the projections would inline the signature into it once
+    // per band-key element
+    val docs = graft.api.Graft.shingleArrays(Tables.documents(spark, sf), "doc_id", "text")
+    val plan = graft.api.Graft.minhashBandKeys(docs).queryExecution.optimizedPlan
+    val sigs = plan.collect { case n =>
+      n.expressions.map(_.collect { case m: graft.functions.MinHashSig => m }.size).sum
+    }.sum
+    assert(sigs == 1, plan.treeString)
   }
 
   test("knn probes broadcast the query set against the corpus") {

@@ -1003,7 +1003,7 @@ class SnapshotsSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("existing"), e3.getMessage)
     // drop lifts enforcement
-    val v4 = Snapshots.dropConstraint(spark, dir, "x_pos")
+    Snapshots.dropConstraint(spark, dir, "x_pos")
     val v5 = Snapshots.commitReplace(spark, dir,
       Seq(("a", java.lang.Long.valueOf(-5L))).toDF("part", "x"), "part")
     assert(Snapshots.read(spark, dir, "part", v5)
@@ -1429,7 +1429,7 @@ class SnapshotsSpec extends SparkSpec {
       Seq(("p0", 1L, 10L), ("p1", 2L, 20L)).toDF("part", "k", "a"), "part")
     val v2 = Snapshots.dropColumn(spark, dir, "a") // retires physical 'a'
     // touch one partition so there is something to roll back over
-    val v3 = Snapshots.commitReplace(spark, dir,
+    Snapshots.commitReplace(spark, dir,
       Seq(("p0", 1L)).toDF("part", "k"), "part")
     val v4 = Snapshots.restore(spark, dir, "part", v2)
     assert(manifestText(dir, v4).contains("retired="),

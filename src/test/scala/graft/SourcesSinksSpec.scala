@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{Sinks, Tables}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Source/sink round-trips: parquet (partitioned), csv, json, text dir. */
@@ -23,7 +24,9 @@ class SourcesSinksSpec extends SparkSpec {
     assert(dirs.exists(_.startsWith("l_returnflag=")))
     // partition-pruned read: only the R slice's files are scanned
     val pruned = back.filter(col("l_returnflag") === "R")
-    val scan = pruned.queryExecution.executedPlan.collectLeaves().head.toString
+    val scans = pruned.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1)
+    assert(scans.head.partitionFilters.exists(_.references.exists(_.name == "l_returnflag")))
     assert(pruned.count() == li.filter(col("l_returnflag") === "R").count())
   }
 

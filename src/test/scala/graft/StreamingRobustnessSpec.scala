@@ -500,7 +500,7 @@ class StreamingRobustnessSpec extends SparkSpec {
     import graft.sources.Snapshots
     val dir = java.nio.file.Files.createTempDirectory("graft_cdfw_tbl").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdfw_ckpt").toString
-    val v1 = Snapshots.commit(spark, dir,
+    Snapshots.commit(spark, dir,
       Seq(("a", 1L), ("b", 10L)).toDF("part", "x"), "part")
     val got1 = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(Long, String, String, Long)]())
@@ -617,10 +617,10 @@ class StreamingRobustnessSpec extends SparkSpec {
     import graft.api.Graft
     val docs = graft.sources.Tables.documents(spark, sf)
     val corpusIdx = Graft.minhashBandKeys(
-        Graft.shingleSet(docs.filter(col("doc_id") % 3 === 0), "doc_id", "text"))
+        Graft.shingleArrays(docs.filter(col("doc_id") % 3 === 0), "doc_id", "text"))
       .select("band", "bandkey").distinct()
     val streamDocs = docs.filter(col("doc_id") % 3 =!= 0)
-    val hit = Graft.minhashBandKeys(Graft.shingleSet(streamDocs, "doc_id", "text"))
+    val hit = Graft.minhashBandKeys(Graft.shingleArrays(streamDocs, "doc_id", "text"))
       .join(corpusIdx, Seq("band", "bandkey"), "left_semi")
       .select("doc_id").distinct()
     val expected = streamDocs.select("doc_id").join(hit, Seq("doc_id"), "left_anti")

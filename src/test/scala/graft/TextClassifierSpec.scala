@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** The trained quality filter (q_text_classifier /
   * Graft.qualityClassifier): planted-junk detection, full fixture junk
