@@ -207,7 +207,7 @@ object Bench {
     // untimed warm-up: one scan per table (page cache + footers)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try graft.sources.Tables.table(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
     try graft.sources.Tables.events(spark, sfDir).count()

@@ -68,12 +68,10 @@ object Streaming {
   }
 
   def tumblingStream(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
     val name = "stream_tumbling_" + java.util.UUID.randomUUID.toString.replace("-", "")
     // the file-stream source wants a directory: stream the sf dir, glob
     // down to the events table
-    val agg = s.readStream.schema(schema)
+    val agg = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
       .option("pathGlobFilter", "events.parquet").parquet(d)
       .transform(graft.sources.Tables.withEventTs)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -95,8 +93,6 @@ object Streaming {
   def sessionStream(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
     val name = "stream_sessions_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val gapUs = 1800000000L
 
@@ -120,7 +116,7 @@ object Streaming {
       out.result().iterator
     }
 
-    val q = s.readStream.schema(schema)
+    val q = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
       .option("pathGlobFilter", "events.parquet").parquet(d)
       .transform(graft.sources.Tables.withEventTs)
       .select(col("user_id"), col("event_id"),
@@ -173,12 +169,10 @@ object Streaming {
   }
 
   private def purchaseClickJoinInner(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
     val name = "stream_ssj_" + java.util.UUID.randomUUID.toString.replace("-", "")
     // one streaming source, two filter branches (stream self-join) — the
     // file source is scanned once per micro-batch, not once per side
-    val src = s.readStream.schema(schema)
+    val src = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
       .option("pathGlobFilter", "events.parquet").parquet(d)
       .transform(graft.sources.Tables.withEventTs)
     val purchases = src.filter(col("event_type") === "purchase")
@@ -209,10 +203,8 @@ object Streaming {
     * int64 on both compare paths (a NULL would coerce pandas to float64).
     */
   def purchaseClickLeftJoin(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
     val name = "stream_ssjl_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val src = s.readStream.schema(schema)
+    val src = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
       .option("pathGlobFilter", "events.parquet").parquet(d)
       .transform(graft.sources.Tables.withEventTs)
     val purchases = src.filter(col("event_type") === "purchase")
@@ -240,10 +232,8 @@ object Streaming {
     * emitting only the key columns makes the result order-insensitive —
     * exactly SELECT DISTINCT in batch. */
   def streamDedup(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
     val name = "stream_dedup_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = s.readStream.schema(schema)
+    val q = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
       .option("pathGlobFilter", "events.parquet").parquet(d)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
@@ -351,10 +341,8 @@ object Streaming {
     * overlapping 2h windows (1h slide) — same shape as the tumbling
     * stream, ~2x the state keys; shares the batch twin's oracle. */
   def slidingStream(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
     val name = "stream_sliding_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = s.readStream.schema(schema)
+    val q = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
       .option("pathGlobFilter", "events.parquet").parquet(d)
       .transform(graft.sources.Tables.withEventTs)
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))

@@ -37,7 +37,7 @@ object Profile {
     spark.sparkContext.setLogLevel("WARN")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try graft.sources.Tables.table(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
     if (doExplain) graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -71,19 +71,18 @@ object Bridge {
 
   /** true iff the frame IS a materialized checkpoint (its analyzed plan
     * is the bare [[LogicalRDD]] a localCheckpoint leaves behind, no
-    * projection on top, AND the underlying RDD is actually checkpointed
-    * or persisted) — the test an iterative pipeline uses to skip
-    * re-materializing a stage output the previous stage already
-    * checkpointed. The RDD-level check matters for the public
-    * louvainMove/communityMerge/modularity entry points: a caller's
-    * `spark.createDataFrame(rdd)` frame is ALSO a bare LogicalRDD, but
-    * lazily recomputed (possibly nondeterministically) — it must still
-    * get the materializing fence. */
+    * projection on top, AND the underlying RDD is actually checkpointed)
+    * — the test an iterative pipeline uses to skip re-materializing a
+    * stage output the previous stage already checkpointed. The RDD-level
+    * check matters for the public louvainMove/communityMerge/modularity
+    * entry points: a caller's `spark.createDataFrame(rdd)` frame is ALSO
+    * a bare LogicalRDD, but lazily recomputed (possibly
+    * nondeterministically) — it must still get the materializing fence.
+    * A merely PERSISTED rdd does not count: its blocks can be evicted and
+    * recomputed, which is exactly what the fence must block. */
   def isCheckpointedRdd(df: DataFrame): Boolean =
     df.asInstanceOf[Dataset[Row]].queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        lr.rdd.isCheckpointed ||
-          lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case lr: LogicalRDD => lr.rdd.isCheckpointed
       case _ => false
     }
 

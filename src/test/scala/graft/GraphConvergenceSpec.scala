@@ -140,4 +140,28 @@ class GraphConvergenceSpec extends SparkSpec {
     assert(Seq(200L, 201L, 202L).exists(v => moved(v) != v),
       "fixture must exercise real moves before converging")
   }
+
+  test("a merely persisted labels frame is not a checkpoint: it still gets the fence") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.storage.StorageLevel
+    val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (3L, 2L), (10L, 11L))
+      .toDF("a", "b")
+    val labels = Seq((0L, 0L), (1L, 0L), (2L, 0L), (3L, 3L), (10L, 10L),
+      (11L, 11L)).toDF("v", "lbl")
+    // a lazy localCheckpoint is a bare LogicalRDD over a PERSISTED rdd
+    // that is not checkpointed yet: its blocks can still be evicted and
+    // recomputed
+    val persisted = labels.localCheckpoint(eager = false)
+    val rdd = persisted.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    assert(rdd.getStorageLevel != StorageLevel.NONE && !rdd.isCheckpointed)
+    assert(!Bridge.isCheckpointedRdd(persisted))
+    val checkpointed = labels.localCheckpoint()
+    assert(Bridge.isCheckpointedRdd(checkpointed))
+    // the fence is a materializing job the checkpointed frame skips
+    assert(jobsDuring(Graft.modularity(persisted, edges))
+      > jobsDuring(Graft.modularity(checkpointed, edges)))
+    assert(Graft.modularity(persisted, edges).collect().toSet
+      == Graft.modularity(checkpointed, edges).collect().toSet)
+  }
 }

@@ -27,6 +27,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("l_tax"), "unused column not pruned:\n" + p)
   }
 
+  test("a warm multi-table SQL query builds without running a Spark job") {
+    // each base-table read resolves its schema once (Tables.table); a
+    // bare read ran one footer-inference job per table, here three
+    q("q_sql_shipping_priority")
+    assert(jobsDuring(q("q_sql_shipping_priority")) == 0)
+  }
+
   test("dim-dim join is a broadcast hash join") {
     val p = planString("q_join_broadcast")
     assert(p.contains("BroadcastHashJoin"), p)
