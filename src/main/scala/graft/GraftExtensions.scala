@@ -15,7 +15,8 @@ import graft.functions.{AsciiSum, CosineSim}
   * that has the graft jar on its classpath — no per-session registration
   * calls. (The reference wires its extension point, the app registry
   * `app_route.py:4-6`, by editing source; this is the Spark-native
-  * equivalent surface.)
+  * equivalent surface.) Every session built with it also serves `file:`
+  * through the engine's no-fork local filesystem (sources/LocalFs.scala).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -55,8 +56,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // that time travel and every reference are already resolved. The
     // rule additionally no-ops until a GraftCatalog has initialized in
     // this JVM (no catalog -> no GraftTable can exist in any plan).
-    ext.injectPostHocResolutionRule(session =>
-      new graft.sources.GraftCatalog.V1FallbackRule(session))
+    // The rule factory runs once per session state, before the session's
+    // first query is analyzed: the one point where the extension sees
+    // the session, so it also installs the no-fork local filesystem
+    // (sources/LocalFs.scala) on the session's SparkContext.
+    ext.injectPostHocResolutionRule { session =>
+      graft.sources.LocalFs.install(session.sparkContext.hadoopConfiguration)
+      new graft.sources.GraftCatalog.V1FallbackRule(session)
+    }
   }
 }
 

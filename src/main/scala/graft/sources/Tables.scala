@@ -63,12 +63,24 @@ object Tables {
     * [[SchemaKey]]. */
   private def schemaOf(spark: SparkSession, path: String): StructType = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val key = SchemaKey(fs.makeQualified(p).toString, files(fs, fs.getFileStatus(p)).sorted,
+    val key = SchemaKey(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString, dataFiles(spark, path),
       spark.conf.getAll.filter { case (k, _) =>
         k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
       })
     schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
+
+  /** (qualified path, length, modification time) of every data file of
+    * the parquet file or Spark-written directory at `path`, sorted: one
+    * status call for a file, the recursive listing for a directory
+    * (skipping `_`/`.`-prefixed names). A stamp of the table's content
+    * that costs no Spark job — the schema cache's key, and what a
+    * fixture derived from a table checks before rebuilding. */
+  def dataFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    files(fs, fs.getFileStatus(p)).sorted
   }
 
   private def files(fs: FileSystem, st: FileStatus): Seq[(String, Long, Long)] =

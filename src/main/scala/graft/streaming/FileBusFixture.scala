@@ -27,10 +27,13 @@ import org.apache.spark.sql.functions._
   *    partition. The aggregate is order-insensitive; the sort just makes
   *    the files bit-deterministic.
   *
-  * Idempotent and cheap when current: a manifest records (sfDir, row
-  * count) and a matching manifest skips the rebuild, so bench re-passes
-  * pay only an events count(). The manifest is written LAST — a crash
-  * mid-build leaves no manifest and the next call rebuilds from scratch.
+  * Idempotent and cheap when current: a manifest records the events
+  * file's qualified path, length and modification time
+  * ([[graft.sources.Tables.dataFiles]]), and a matching manifest skips
+  * the rebuild, so bench re-passes pay one status call and no Spark
+  * job; a rewritten events file (even one with the same row count)
+  * rebuilds. The manifest is written LAST — a crash mid-build leaves no
+  * manifest and the next call rebuilds from scratch.
   */
 object FileBusFixture {
   val Partitions = 4
@@ -119,13 +122,13 @@ object FileBusFixture {
       line: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column,
       ascending: Boolean = true): String =
     synchronized {
-      val evs = graft.sources.Tables.events(s, sfDir)
-      val n = evs.count()
       val manifest = Paths.get(dir, "manifest.txt")
-      val want = s"$sfDir\n$n\n"
+      val want = graft.sources.Tables.dataFiles(s, s"$sfDir/events.parquet")
+        .map { case (f, len, mtime) => s"$f\t$len\t$mtime\n" }.mkString
       val current = Files.exists(manifest) &&
         new String(Files.readAllBytes(manifest), UTF_8) == want
       if (!current) {
+        val evs = graft.sources.Tables.events(s, sfDir)
         deleteRecursively(Paths.get(dir))
         FileBus.createTopic(dir, Partitions)
         val lines = evs.select(

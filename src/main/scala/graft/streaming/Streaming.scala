@@ -57,13 +57,8 @@ object Streaming {
     * stream-stream join). Production sizes this to throughput at stream
     * START; the batch queries around these are untouched. */
   private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    // SPARK_GRAFT_STREAM_PARTS overrides the replay's state-partition
-    // sizing (dev knob for measuring store-count overhead; production
-    // sizes this to stream throughput at start)
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .flatMap(_.toIntOption).getOrElse(n)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    s.conf.set("spark.sql.shuffle.partitions", n.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 

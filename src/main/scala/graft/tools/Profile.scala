@@ -7,12 +7,19 @@ import org.apache.spark.sql.SparkSession
   * for "is this the plan I'd want at 100 TB", per query instead of per
   * bench run.
   *
-  * Usage: runMain graft.tools.Profile <queryName> [reps] [explain]
+  * Usage: runMain graft.tools.Profile <queryName[,queryName...]|all> [reps] [explain]
   * Env:   SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4)
+  *
+  * Several queries (or `all`, the whole registry) run one after another
+  * in the same session, each for `reps` reps; a failing rep prints
+  * `failed` and the run goes on (scripts/fork_count.sh sweeps the
+  * registry this way).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names =
+      if (args(0) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
+      else args(0).split(',').toSeq
     // both optionals work alone: "Profile q_x explain" must not NPE on
     // args(1).toInt — take the first arg that parses as an int
     val reps = args.drop(1).flatMap(_.toIntOption).headOption.getOrElse(3)
@@ -40,12 +47,20 @@ object Profile {
       try graft.sources.Tables.table(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    if (doExplain) graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
-    for (r <- 1 to reps) {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      println(f"[profile] $name rep $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    for (name <- names) {
+      if (doExplain) graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      for (r <- 1 to reps) {
+        val t0 = System.nanoTime()
+        try {
+          graft.SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          println(f"[profile] $name rep $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        } catch {
+          case e: Exception if names.size > 1 =>
+            spark.streams.active.foreach(q => scala.util.Try(q.stop()))
+            println(s"[profile] $name rep $r: failed (${e.getClass.getSimpleName})")
+        }
+      }
     }
     spark.stop()
   }

@@ -8,8 +8,7 @@ import org.apache.spark.sql.SparkSession
   * cost actually go", which wall-clock timing alone can't answer.
   *
   * Usage: runMain graft.tools.StreamProfile [reps]
-  * Env:   SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4),
-  *        SPARK_GRAFT_STREAM_PARTS (state partition override)
+  * Env:   SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4)
   */
 object StreamProfile {
   def main(args: Array[String]): Unit = {

@@ -414,4 +414,37 @@ class FileBusSpec extends SparkSpec {
         s"restart must resume from committed offsets; read $readRows rows, want ${delta.size}")
     } finally q2.stop()
   }
+
+  test("a current fixture topic is checked with no Spark job; a rewritten events file rebuilds it") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val d = Files.createTempDirectory("graft_busfix_")
+    Files.copy(Paths.get(s"$sf/events.parquet"), d.resolve("events.parquet"))
+    val topic = graft.streaming.FileBusFixture.ensureTopic(spark, d.toString)
+    def logs(): Seq[String] = (0 until graft.streaming.FileBusFixture.Partitions)
+      .map(p => new String(Files.readAllBytes(Paths.get(topic, s"p$p.log")), "UTF-8"))
+    try {
+      val built = logs()
+      val rows = spark.read.parquet(s"$sf/events.parquet").count()
+      assert(built.map(_.count(_ == '\n')).sum == rows)
+      assert(jobsDuring(graft.streaming.FileBusFixture.ensureTopic(spark, d.toString)) == 0)
+      assert(logs() == built)
+      // same row count, new values: the old (path, row count) manifest
+      // could not tell this fixture from the first one
+      val staging = d.resolve("staging").toString
+      graft.sources.Tables.events(spark, d.toString)
+        .withColumn("value", org.apache.spark.sql.functions.col("value") * 2)
+        .coalesce(1).write.parquet(staging)
+      val part = new java.io.File(staging).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, d.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      assert(jobsDuring(graft.streaming.FileBusFixture.ensureTopic(spark, d.toString)) > 0)
+      val rebuilt = logs()
+      assert(rebuilt.map(_.count(_ == '\n')).sum == rows)
+      assert(rebuilt != built)
+    } finally {
+      Seq(Paths.get(topic), d).foreach { p =>
+        Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+      }
+    }
+  }
 }
