@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: per-query seconds on SPARK_GRAFT_SF_DIR. Each query is
   * forced through the `noop` sink so the full output (including projections
   * a bare count() would prune) is materialized. An untimed warm-up touches
@@ -192,26 +190,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.stopTimeout", "30s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // untimed warm-up: one scan per table (page cache + footers)
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      try graft.sources.Tables.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
-    try graft.sources.Tables.events(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    val spark = Session.create()
+    Session.warmTables(spark, sfDir)
     // untimed warm-up: JIT/codegen for agg + window + join shapes, so the
     // first timed query doesn't absorb ~10 s of compiler cold start
     try {

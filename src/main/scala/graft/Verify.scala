@@ -64,18 +64,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // a hung stream's stop() must throw, not wait forever — otherwise a
-      // wedged streaming query pins its withStatePartitions conf restore
-      .config("spark.sql.streaming.stopTimeout", "30s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create()
     new java.io.File(outDir).mkdirs()
     // stale scratch dirs from a previous timed-out/killed run must not
     // accumulate (or be mistaken for output by a directory listing)

@@ -15,8 +15,9 @@ import graft.functions.VectorFunctions.cosine
   *
   * Conventions:
   *  - `id` must be a unique long column; pair outputs emit `i < j`.
-  *  - tokenization = lower + whitespace split, the reference's
-  *    `datanode.py:598-603` semantics.
+  *  - tokenization = lower + whitespace split ([[tokens]], the one
+  *    tokenizer), the reference's `datanode.py:598-603` semantics; every
+  *    n-gram window is cut by [[ngrams]].
   *  - all hashing is the portable md5-60 family (graft.Exact.h60) —
   *    deterministic on any cluster, reproducible across engines.
   */
@@ -43,10 +44,32 @@ object Graft {
     def loopCheckpoint(): DataFrame = ck(df)
   }
 
-  /** lower-cased whitespace tokens, empties dropped (lambda-free: no
-    * interpreted higher-order function per row) */
+  /** lower-cased whitespace tokens, empties dropped — the engine's one
+    * tokenizer (lambda-free: no interpreted higher-order function per
+    * row). A token never holds a space, which [[ngrams]] relies on. */
   def tokens(c: Column): Column =
     array_remove(split(lower(c), "\\s+"), "")
+
+  /** Every overlapping window of `n` consecutive tokens of the token
+    * array `toks`, in order, each joined by single spaces — the engine's
+    * one n-gram window builder. Lambda-free: the tokens joined by single
+    * spaces, then one regex pass that captures `n` tokens ahead of every
+    * token start (a token never holds a space, so each capture is
+    * exactly one window). Fewer than `n` tokens (or a null array) give
+    * no match, so callers need no `size(toks) >= n` guard. */
+  def ngrams(toks: Column, n: Int): Column = {
+    require(n >= 1, s"window width must be positive: $n")
+    regexp_extract_all(concat_ws(" ", toks),
+      lit(s"(?:^| )(?=([^ ]+(?: [^ ]+){${n - 1}}))"), lit(1))
+  }
+
+  /** one `(keep..., w1, w2)` row per adjacent token pair of the token
+    * array `toks` — the engine's one bigram builder: the width-2
+    * [[ngrams]] split back at their one space */
+  def bigramPairs(df: DataFrame, toks: Column, keep: String*): DataFrame =
+    df.select(keep.map(col) :+ explode(ngrams(toks, 2)).as("bg"): _*)
+      .select(keep.map(col) ++ Seq(substring_index(col("bg"), " ", 1).as("w1"),
+        substring_index(col("bg"), " ", -1).as("w2")): _*)
 
   /** RE2-safe content-filter patterns — ONE definition feeds the Spark
     * predicates AND (interpolated) the DuckDB oracles of every query
@@ -78,7 +101,6 @@ object Graft {
   /** WordCount — the reference's registered app (`app.py:6-14`). */
   def wordCount(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(tokens(col(textCol))).as("word"))
-      .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
   // ---- dedup family --------------------------------------------------
@@ -99,11 +121,8 @@ object Graft {
     * shingle relation would be pure cost. */
   def shingleSet(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, dedup: Boolean = true): DataFrame = {
-    val raw = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("l"))
-      .filter(size(col("l")) >= n)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(1), size(col("l")) - (n - 1)),
-          i => concat_ws(" ", slice(col("l"), i, lit(n))))).as("shingle"))
+    val raw = docs.select(col(idCol).as("doc_id"),
+      explode(ngrams(tokens(col(textCol)), n)).as("shingle"))
     if (dedup) raw.distinct() else raw
   }
 
@@ -123,22 +142,18 @@ object Graft {
     * at `spark.sql.shuffle.partitions`: a by-column repartition of a
     * few MB is one AQE would coalesce back into a single task.
     *
-    * The windows are cut lambda-free: the [[tokens]] of the text joined
-    * by single spaces, then one regex pass that captures 3 tokens ahead
-    * of every token start — the same strings [[shingleSet]] builds with
-    * `transform(slice)` (asserted in DedupSimilaritySpec), without its
-    * interpreted per-window lambda. A doc with fewer than 3 tokens has no
-    * match, so dropping empty arrays is the `size(tokens) >= 3` filter. */
+    * The windows are the width-3 [[ngrams]] of the text's [[tokens]] —
+    * the same strings [[shingleSet]] explodes. A doc with fewer than 3
+    * tokens has no window, so dropping empty arrays is the
+    * `size(tokens) >= 3` filter. */
   def shingleArrays(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val joined = concat_ws(" ", tokens(col("text")))
-    val window = "(?:^| )(?=([^ ]+(?: [^ ]+){2}))"
     // the empty-array filter sits ABOVE the merge: below it, the
     // optimizer would push the whole regex under the exchange, into the
     // scan, and evaluate it twice
     docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .repartition(parts, col("doc_id"))
-      .select(col("doc_id"), regexp_extract_all(joined, lit(window), lit(1)).as("shingles"))
+      .select(col("doc_id"), ngrams(tokens(col("text")), 3).as("shingles"))
       .groupBy("doc_id")
       .agg(array_distinct(flatten(collect_list(col("shingles")))).as("shingles"))
       .filter(size(col("shingles")) > 0)
@@ -708,25 +723,19 @@ object Graft {
     * heuristic split the model is trained to smooth). One narrow scan,
     * zero shuffle. */
   def qualityFeatures(docs: DataFrame): DataFrame = {
-    val sw = graft.functions.TextAnalysis.stopwords
-    val nTok = greatest(size(col("toks")), lit(1))
-    val sumLen = aggregate(transform(col("toks"), t => length(t)),
-      lit(0L), (a, x) => a + x)
-    val stopCnt = size(filter(col("toks"), t => t.isin(sw: _*)))
-    val meanLen = sumLen.cast("double") / nTok
-    val quality = lit(0.5) * when(length(col("text")).between(100, 2000), 1).otherwise(0) +
-      lit(0.25) * when(meanLen.between(3, 8), 1).otherwise(0) +
-      lit(0.25) * least(stopCnt.cast("double") / nTok * 4, lit(1.0))
-    docs.select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
+    import graft.functions.TextAnalysis.{tokenChars, withQualityGates}
+    val toks = col("toks")
+    val nTok = greatest(size(toks), lit(1))
+    withQualityGates(docs.select(col("doc_id"), col("text"), tokens(col("text")).as("toks")))
       .select(
         col("doc_id"),
-        (least(size(col("toks")), lit(200)).cast("double") / 200.0).as("x1"),
-        (stopCnt.cast("double") / nTok).as("x2"),
-        (least(meanLen, lit(10.0)) / 10.0).as("x3"),
-        (size(array_distinct(col("toks"))).cast("double") / nTok).as("x4"),
+        (least(size(toks), lit(200)).cast("double") / 200.0).as("x1"),
+        col("stop_ratio").as("x2"),
+        (least(tokenChars(toks).cast("double") / nTok, lit(10.0)) / 10.0).as("x3"),
+        (size(array_distinct(toks)).cast("double") / nTok).as("x4"),
         (length(regexp_replace(col("text"), "[^0-9]", "")).cast("double")
           / greatest(length(col("text")), lit(1))).as("x5"),
-        when(quality < 0.5, 1.0).otherwise(0.0).as("y"))
+        when(col("quality") < 0.5, 1.0).otherwise(0.0).as("y"))
   }
 
   /** TRAINED quality filter: full-batch class-balanced logistic

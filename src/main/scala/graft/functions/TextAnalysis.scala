@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import graft.QueryDef
+import graft.api.Graft
+import graft.api.Graft.{ngrams, tokens}
 import graft.sources.Tables._
 
 /** Text-analysis operators for a training-data pipeline: token/char stats,
@@ -13,6 +15,33 @@ import graft.sources.Tables._
 object TextAnalysis {
 
   private[graft] val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it")
+
+  /** summed character length of the token array `toks`, as a long
+    * (lambda-free: the length of their concatenation) */
+  private[graft] def tokenChars(toks: Column): Column =
+    length(concat_ws("", toks)).cast("long")
+
+  /** share of the token array `toks` that is stopwords; an empty array
+    * counts as one token */
+  private def stopRatio(toks: Column): Column =
+    size(filter(toks, t => t.isin(stopwords: _*))).cast("double") /
+      greatest(size(toks), lit(1))
+
+  /** `df` plus the text-quality heuristic of its `text` column and that
+    * text's tokens in column `toks`: `len_ok` (1 when the text has
+    * 100-2000 chars), `stop_ratio`, `tok_len_ok` (1 when the mean token
+    * length is 3-8) and `quality` = 0.5 len_ok + 0.25 tok_len_ok + 0.25
+    * min(4 stop_ratio, 1). q_text_quality emits these columns;
+    * [[graft.api.Graft.qualityFeatures]] labels its rows with `quality`. */
+  private[graft] def withQualityGates(df: DataFrame): DataFrame = {
+    val meanLen = tokenChars(col("toks")).cast("double") / greatest(size(col("toks")), lit(1))
+    df.select(col("*"),
+        when(length(col("text")).between(100, 2000), 1).otherwise(0).as("len_ok"),
+        stopRatio(col("toks")).as("stop_ratio"),
+        when(meanLen.between(3, 8), 1).otherwise(0).as("tok_len_ok"))
+      .withColumn("quality", lit(0.5) * col("len_ok") + lit(0.25) * col("tok_len_ok")
+        + lit(0.25) * least(col("stop_ratio") * 4, lit(1.0)))
+  }
 
   /** RE2-compatible PII patterns (no lookaround/backrefs): identical
     * match semantics under Java regex (engine) and RE2 (DuckDB oracle).
@@ -49,10 +78,6 @@ object TextAnalysis {
   def piiRedactSql(inner: String): String =
     s"regexp_replace(regexp_replace($inner, '$PiiEmailRe', '<EMAIL>', 'g'), '$PiiPhoneRe', '<PHONE>', 'g')"
 
-  /** tokens of lower-cased text, whitespace split, empties dropped */
-  def tokens(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => t =!= "")
-
   /** Rounds of the BPE trainer replayed by [[bpeOracle]]. 8 reaches
     * multi-char recursion on the fixture corpus (step 8 merges p+ar).
     * Declared before `defs` — the oracle string interpolates it at
@@ -84,8 +109,8 @@ object TextAnalysis {
           col("doc_id"),
           size(col("toks")).as("n_tokens"),
           length(col("text")).as("n_chars_actual"),
-          (aggregate(transform(col("toks"), t => length(t)), lit(0L), (acc, x) => acc + x)
-            .cast("double") / size(col("toks"))).as("avg_token_len"))
+          (tokenChars(col("toks")).cast("double") / size(col("toks")))
+            .as("avg_token_len"))
     },
 
     // Language-ID heuristic: stopword hit-ratio against a tiny English
@@ -104,9 +129,7 @@ object TextAnalysis {
          |""".stripMargin) { (s, d) =>
       documents(s, d)
         .select(col("doc_id"), col("lang"), tokens(col("text")).as("toks"))
-        .withColumn("stop_ratio",
-          size(filter(col("toks"), t => t.isin(stopwords: _*))).cast("double")
-            / greatest(size(col("toks")), lit(1)))
+        .withColumn("stop_ratio", stopRatio(col("toks")))
         .withColumn("pred_lang", when(col("stop_ratio") >= 0.05, "en").otherwise("unk"))
         .select("doc_id", "lang", "stop_ratio", "pred_lang")
     },
@@ -130,19 +153,8 @@ object TextAnalysis {
          |        list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '') AS toks
          |      FROM documents)
          |""".stripMargin) { (s, d) =>
-      documents(s, d)
-        .select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
-        .withColumn("len_ok",
-          when(length(col("text")).between(100, 2000), 1).otherwise(0))
-        .withColumn("stop_ratio",
-          size(filter(col("toks"), t => t.isin(stopwords: _*))).cast("double")
-            / greatest(size(col("toks")), lit(1)))
-        .withColumn("tok_len_ok",
-          when((aggregate(transform(col("toks"), t => length(t)), lit(0L), (acc, x) => acc + x)
-            .cast("double") / greatest(size(col("toks")), lit(1))).between(3, 8), 1).otherwise(0))
-        .withColumn("quality",
-          lit(0.5) * col("len_ok") + lit(0.25) * col("tok_len_ok")
-            + lit(0.25) * least(col("stop_ratio") * 4, lit(1.0)))
+      withQualityGates(documents(s, d)
+          .select(col("doc_id"), col("text"), tokens(col("text")).as("toks")))
         .select("doc_id", "len_ok", "stop_ratio", "tok_len_ok", "quality")
     },
 
@@ -263,7 +275,6 @@ object TextAnalysis {
         |FROM documents d LEFT JOIN shared s ON s.doc_id = d.doc_id
         |WHERE d.doc_id % 50 <> 0
         |""".stripMargin) { (s, d) =>
-      import graft.api.Graft
       val docs = documents(s, d)
       val sh = Graft.shingleSet(docs, "doc_id", "text", n = 13)
       val evalSh = sh.filter(col("doc_id") % 50 === 0).select("shingle").distinct()
@@ -300,7 +311,6 @@ object TextAnalysis {
         |FROM sh JOIN dfreq f ON f.shingle = sh.shingle
         |GROUP BY 1
         |""".stripMargin) { (s, d) =>
-      import graft.api.Graft
       // A df==1 shingle has exactly ONE owning doc, so per-doc rare counts
       // fall out of the shingle-side aggregate directly (min(doc_id) is
       // that owner) — no need to join the document-frequency table back
@@ -330,12 +340,7 @@ object TextAnalysis {
       "q_text_bigrams",
       (s: org.apache.spark.sql.SparkSession, d: String) => {
         import org.apache.spark.sql.expressions.Window
-        val toks = documents(s, d)
-          .select(col("doc_id"), tokens(col("text")).as("l"))
-          .filter(size(col("l")) >= 2)
-        val bigrams = toks.select(col("doc_id"),
-            explode(expr("transform(sequence(1, size(l) - 1), i -> struct(l[i-1] AS w1, l[i] AS w2))")).as("b"))
-          .select(col("b.w1"), col("b.w2"))
+        val bigrams = Graft.bigramPairs(documents(s, d), tokens(col("text")))
         val uni = bigrams.groupBy("w1").agg(count(lit(1)).as("n1"))
         // Top-20 via orderBy+limit (plans as TakeOrderedAndProject), NOT a
         // row_number() over an unpartitioned window — that funnels the whole
@@ -448,10 +453,7 @@ object TextAnalysis {
       val sp = graft.Exact.h60(concat(lit("ppl:"), col("doc_id").cast("string"))) % 5
       val tr = t.filter(sp =!= 0 && size(col("l")) >= 2)
       val he = t.filter(sp === 0 && size(col("l")) >= 2)
-      val bgtr = tr.select(explode(
-          expr("transform(sequence(1, size(l) - 1), i -> struct(l[i-1] AS w1, l[i] AS w2))"))
-          .as("b"))
-        .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
+      val bgtr = Graft.bigramPairs(tr, col("l"))
         .localCheckpoint() // feeds the pair AND context counts
       val c12 = bgtr.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       val c1 = bgtr.groupBy("w1").agg(count(lit(1)).as("c1"))
@@ -506,12 +508,7 @@ object TextAnalysis {
     QueryDef(
       "q_text_pmi",
       (s: org.apache.spark.sql.SparkSession, d: String) => {
-        val toks = documents(s, d)
-          .select(col("doc_id"), tokens(col("text")).as("l"))
-          .filter(size(col("l")) >= 2)
-        val bigrams = toks.select(
-            explode(expr("transform(sequence(1, size(l) - 1), i -> struct(l[i-1] AS w1, l[i] AS w2))")).as("b"))
-          .select(col("b.w1"), col("b.w2"))
+        val bigrams = Graft.bigramPairs(documents(s, d), tokens(col("text")))
           .localCheckpoint() // feeds both marginals, the pairs, the total
         val uni1 = bigrams.groupBy("w1").agg(count(lit(1)).as("c1"))
         val uni2 = bigrams.groupBy("w2").agg(count(lit(1)).as("c2"))
@@ -966,11 +963,7 @@ object TextAnalysis {
         |FROM ov JOIN sz sa ON sa.source = src_a JOIN sz sb ON sb.source = src_b
         |""".stripMargin) { (s, d) =>
       val tg = documents(s, d)
-        .select(col("source"), tokens(col("text")).as("l"))
-        .filter(size(col("l")) >= 3)
-        .select(col("source"), explode(expr(
-          "transform(sequence(1, size(l) - 2), " +
-            "i -> concat_ws(' ', l[i-1], l[i], l[i+1]))")).as("tg"))
+        .select(col("source"), explode(ngrams(tokens(col("text")), 3)).as("tg"))
         .distinct()
         .localCheckpoint() // sizes + both join sides from one distinct pass
       val sz = tg.groupBy("source").agg(count(lit(1)).as("n"))
@@ -1032,20 +1025,17 @@ object TextAnalysis {
     * the gram explode AND the final per-doc join) and the (doc_id, p)
     * start positions of grams occurring more than once corpus-wide.
     * Grams shuffle as 8-byte h60 keys, never 13-word strings. */
-  private def dupGramStarts(s: org.apache.spark.sql.SparkSession,
+  private[graft] def dupGramStarts(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val tok = documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("l"))
       .localCheckpoint()
-    // the size guard mirrors the oracle's empty range(): Spark's
-    // sequence(1, n) with n < 1 would count DOWN, not produce []
-    val grams = tok.filter(size(col("l")) >= DupN)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(l) - ${DupN - 1}), " +
-          s"p -> struct(p AS p, concat_ws(' ', slice(l, p, $DupN)) AS gtxt))"))
-        .as("e"))
-      .select(col("doc_id"), col("e.p").as("p"),
-        graft.Exact.h60(col("e.gtxt")).as("g"))
+    // a gram's position p is its 1-based start token, the oracle's
+    // list_slice start
+    val grams = tok
+      .select(col("doc_id"), posexplode(ngrams(col("l"), DupN)).as(Seq("p0", "gtxt")))
+      .select(col("doc_id"), (col("p0") + 1).as("p"),
+        graft.Exact.h60(col("gtxt")).as("g"))
     // duplicate test as a count window PARTITIONED BY the gram key: one
     // shuffle of the gram relation and ONE md5 pass — the groupBy+join
     // formulation derived the grams twice (build and probe sides),

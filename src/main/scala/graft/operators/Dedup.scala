@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.QueryDef
+import graft.api.Graft.{ngrams, tokens}
 import graft.sources.Tables._
 
 /** Deduplication family for a 100 TB training-data pipeline:
@@ -23,28 +24,18 @@ import graft.sources.Tables._
   */
 object Dedup {
 
-  /** whitespace tokens of lowered text */
-  private def toks(c: Column): Column = filter(split(lower(c), "\\s+"), t => t =!= "")
-
-  /** distinct 3-token shingles per doc (docs with <3 tokens drop out) */
+  /** distinct 3-token shingles per doc with its length band (docs with
+    * <3 tokens drop out) */
   def shingles(s: SparkSession, d: String): DataFrame =
-    documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"), toks(col("text")).as("l"))
-      .filter(size(col("l")) >= 3)
-      .select(col("doc_id"), col("lang"), (floor(col("n_chars") / 100)).as("band"),
-        explode(transform(sequence(lit(1), size(col("l")) - 2),
-          i => concat_ws(" ", slice(col("l"), i, lit(3))))).as("shingle"))
-      .distinct()
+    shingleRows(documents(s, d), floor(col("n_chars") / 100).as("band"))
 
-  /** the same 3-token shingle derivation over an arbitrary
-    * (doc_id, lang, text, ...) relation — the per-micro-batch form the
-    * streaming containment filter shingles arriving docs with. */
-  private[graft] def shingleRows(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("lang"), toks(col("text")).as("l"))
-      .filter(size(col("l")) >= 3)
-      .select(col("doc_id"), col("lang"),
-        explode(transform(sequence(lit(1), size(col("l")) - 2),
-          i => concat_ws(" ", slice(col("l"), i, lit(3))))).as("shingle"))
+  /** distinct `(doc_id, lang, keep..., shingle)` 3-token shingle rows of
+    * an arbitrary (doc_id, lang, text, ...) relation — also the
+    * per-micro-batch form the streaming containment filter shingles
+    * arriving docs with. */
+  private[graft] def shingleRows(docs: DataFrame, keep: Column*): DataFrame =
+    docs.select(Seq(col("doc_id"), col("lang")) ++ keep :+
+        explode(ngrams(tokens(col("text")), 3)).as("shingle"): _*)
       .distinct()
 
   val defs: Seq[QueryDef] = Seq(

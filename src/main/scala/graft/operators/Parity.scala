@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
+import graft.api.Graft
 import graft.functions.AsciiSum
 import graft.sources.Tables._
 
@@ -22,11 +23,7 @@ object Parity {
         |  SELECT unnest(regexp_split_to_array(lower(text), '\s+')) AS word FROM documents
         |) t WHERE word <> '' GROUP BY word
         |""".stripMargin) { (s, d) =>
-      documents(s, d)
-        .select(explode(split(lower(col("text")), "\\s+")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy("word")
-        .agg(count(lit(1)).as("cnt"))
+      Graft.wordCount(documents(s, d), "text")
     },
 
     // The reference's hash partitioner (`utilities.py:59-61`): UTF-8 byte
@@ -48,11 +45,7 @@ object Parity {
         |  SELECT unnest(regexp_split_to_array(lower(text), '\s+')) AS word FROM documents
         |) t WHERE word <> '' GROUP BY word
         |""".stripMargin) { (s, d) =>
-      documents(s, d)
-        .select(explode(split(lower(col("text")), "\\s+")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy("word")
-        .agg(count(lit(1)).as("cnt"))
+      Graft.wordCount(documents(s, d), "text")
         .withColumn("partition_id", AsciiSum.parityPartition(col("word"), 100))
         .select("word", "partition_id", "cnt")
     },
@@ -74,8 +67,7 @@ object Parity {
       // choice yields the same global ranks, so AQE coalescing and
       // sampling-based boundaries can't perturb the result.
       val words = documents(s, d)
-        .select(explode(split(lower(col("text")), "\\s+")).as("word"))
-        .filter(col("word") =!= "")
+        .select(explode(Graft.tokens(col("text"))).as("word"))
         .distinct()
       // localCheckpoint pins ONE physical range partitioning: both the
       // offsets branch and the join branch below must see the same

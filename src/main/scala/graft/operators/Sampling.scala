@@ -2264,13 +2264,8 @@ SELECT doc_id, n_bigrams, score_q16, avgq, stage, bucket,
 FROM staged
 """.stripMargin) { (s, d) =>
       import graft.Exact.{h60, q16}
-      val t = documents(s, d)
-        .select(col("doc_id"), graft.api.Graft.tokens(col("text")).as("l"))
-        .filter(size(col("l")) >= 2)
-      val bg = t.select(col("doc_id"), explode(
-          expr("transform(sequence(1, size(l) - 1), i -> struct(l[i-1] AS w1, l[i] AS w2))"))
-          .as("b"))
-        .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+      val bg = graft.api.Graft.bigramPairs(documents(s, d),
+          graft.api.Graft.tokens(col("text")), "doc_id")
         .localCheckpoint() // model counts AND per-doc scoring read it
       val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
@@ -2473,7 +2468,7 @@ FROM (
           TextAnalysis.injectPii(col("text"), col("doc_id"))).as("rt"))
       val kept = red
         .select(col("doc_id"), col("lang"),
-          size(TextAnalysis.tokens(col("rt"))).cast("long").as("n_tokens"))
+          size(graft.api.Graft.tokens(col("rt"))).cast("long").as("n_tokens"))
         .filter(col("n_tokens") >= 20)
       graft.api.Graft.packSequences(kept, "doc_id", "n_tokens")
         .select("doc_id", "lang", "bucket", "n_tokens", "bin", "bin_offset")

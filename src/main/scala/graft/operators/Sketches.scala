@@ -194,10 +194,7 @@ object Sketches {
          |  AND cl.b = ('0x' || substr(md5('cm' || u.j::VARCHAR || ':' || t.word), 1, 15))::BIGINT % $CmW
          |GROUP BY t.word, t.cnt
          |""".stripMargin) { (s, d) =>
-      val cnts = documents(s, d)
-        .select(explode(split(lower(col("text")), "\\s+")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
+      val cnts = graft.api.Graft.wordCount(documents(s, d), "text")
       // sketch built from the count aggregate: per distinct token, one
       // (row, bucket, cnt) triple per hash row — token INSTANCES never
       // shuffle twice

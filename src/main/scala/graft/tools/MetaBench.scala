@@ -3,7 +3,6 @@
 // in BASELINE.md (the long-history / big-manifest bounds section)
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the driver-side costs that bound big manifests:
@@ -27,13 +26,7 @@ import org.apache.spark.sql.functions._
   * path-identity shape). */
 object MetaBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions()(_))
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     import graft.sources.Snapshots
 
     def timeMs[A](reps: Int)(body: => A): Double = {

@@ -3,7 +3,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 object Plans {
@@ -246,14 +245,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions()(_))
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create(logLevel = "ERROR")
 
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan evidence for the scale design\n\n"

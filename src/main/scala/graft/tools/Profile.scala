@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time ONE registered query repeatedly (same session config as
   * graft.Bench) and optionally dump its formatted plan — the feedback loop
   * for "is this the plan I'd want at 100 TB", per query instead of per
@@ -25,15 +23,7 @@ object Profile {
     val reps = args.drop(1).flatMap(_.toIntOption).headOption.getOrElse(3)
     val doExplain = args.contains("explain")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions()(_))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.stopTimeout", "30s")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.Session.builder()
     // A/B harness: semicolon-separated k=v pairs, e.g.
     // SPARK_GRAFT_CONF_EXTRA='spark.sql.join.preferSortMergeJoin=false'
     sys.env.get("SPARK_GRAFT_CONF_EXTRA").foreach(
@@ -42,11 +32,7 @@ object Profile {
       })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      try graft.sources.Tables.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    graft.Session.warmTables(spark, sfDir)
     for (name <- names) {
       if (doExplain) graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
       for (r <- 1 to reps) {

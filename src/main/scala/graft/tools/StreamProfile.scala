@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run the stream-stream replay once and dump each micro-batch's
   * durationMs breakdown (addBatch / getBatch / walCommit / commitOffsets /
   * stateCommit...) — the feedback loop for "where does the replay's fixed
@@ -14,17 +12,7 @@ object StreamProfile {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.flatMap(_.toIntOption).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions()(_))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.stopTimeout", "30s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
 
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._

@@ -54,20 +54,76 @@ class DedupSimilaritySpec extends SparkSpec {
     (6L, "  Leading\tand   trailing \n whitespace   collapses  ")
   ).toDF("doc_id", "text")
 
+  /** the lambda formulation the regex window kernel replaced, kept here
+    * as the reference it must match string for string: the old filtering
+    * tokenizer, then a `transform(sequence, slice)` window at every
+    * 1-based start `p` of docs with >= n tokens. (doc_id, p, shingle). */
+  private def referenceWindows(docs: org.apache.spark.sql.DataFrame,
+      n: Int): org.apache.spark.sql.DataFrame =
+    docs.select(col("doc_id"),
+        filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("l"))
+      .filter(size(col("l")) >= n)
+      .select(col("doc_id"), explode(transform(sequence(lit(1), size(col("l")) - (n - 1)),
+        i => struct(i.as("p"), concat_ws(" ", slice(col("l"), i, lit(n))).as("shingle"))))
+        .as("w"))
+      .select(col("doc_id"), col("w.p"), col("w.shingle"))
+
+  /** [[edgeDocs]] plus, for window width n: a doc of exactly n tokens and
+    * one of n - 1, tab/newline/CR-separated tokens, and tokens holding a
+    * no-break space (U+00A0) or an ideographic space (U+3000), which the
+    * whitespace split keeps inside the token */
+  private def windowDocs(n: Int) = edgeDocs.union(Seq[(Long, String)](
+    (10L, (1 to n).map(i => s"w$i").mkString(" ")),
+    (11L, (1 to n - 1).map(i => s"v$i").mkString(" ")),
+    (12L, "\t" + (1 to n + 2).map(i => s"t$i").grouped(2).map(_.mkString("\t"))
+      .mkString("\n") + "\r\n"),
+    (13L, (1 to n + 1).map(i => if (i % 2 == 0) s"a\u00a0$i" else s"東京\u3000$i")
+      .mkString(" "))
+  ).toDF("doc_id", "text"))
+
   test("shingleArrays holds exactly the exploded distinct shingle sets") {
-    // the regex windows must reproduce transform(slice) shingling string
-    // for string — including the merge of doc 5's two rows and the drop
-    // of docs 3 (< 3 tokens) and 4 (null text)
-    val arrays = graft.api.Graft.shingleArrays(edgeDocs, "doc_id", "text")
+    // the regex windows must reproduce the transform(slice) reference
+    // string for string — including the merge of doc 5's two rows and the
+    // drop of docs 3 (< 3 tokens), 4 (null text) and 11 (n - 1 tokens)
+    val docs = windowDocs(3)
+    val arrays = graft.api.Graft.shingleArrays(docs, "doc_id", "text")
       .as[(Long, Seq[String])].collect()
-    val exploded = graft.api.Graft.shingleSet(edgeDocs, "doc_id", "text")
+    val truth = referenceWindows(docs, 3).select("doc_id", "shingle")
       .as[(Long, String)].collect().groupBy(_._1)
       .map { case (k, v) => k -> v.map(_._2).toSet }
-    assert(arrays.map(_._1).sorted.toSeq == Seq(1L, 2L, 5L, 6L))
+    assert(arrays.map(_._1).sorted.toSeq == Seq(1L, 2L, 5L, 6L, 10L, 12L, 13L))
     arrays.foreach { case (id, sh) =>
       assert(sh.distinct.size == sh.size, s"doc $id array not distinct: $sh")
-      assert(sh.toSet == exploded(id), s"doc $id: $sh vs ${exploded(id)}")
+      assert(sh.toSet == truth(id), s"doc $id: $sh vs ${truth(id)}")
     }
+  }
+
+  test("the n-gram window kernel equals the transform(slice) reference at n = 2, 3, 13") {
+    for (n <- Seq(2, 3, 13)) {
+      val docs = windowDocs(n)
+      val truth = referenceWindows(docs, n).as[(Long, Int, String)].collect().sorted.toSeq
+      assert(truth.exists(_._1 == 10L) && !truth.exists(_._1 == 11L), s"n=$n: $truth")
+      // posexplode positions + 1 are the slice starts dupGramStarts keys on
+      val kernel = docs.select(col("doc_id"),
+          posexplode(graft.api.Graft.ngrams(graft.api.Graft.tokens(col("text")), n))
+            .as(Seq("p0", "shingle")))
+        .select(col("doc_id"), (col("p0") + 1).as("p"), col("shingle"))
+        .as[(Long, Int, String)].collect().sorted.toSeq
+      assert(kernel == truth, s"n=$n")
+      val set = graft.api.Graft.shingleSet(docs, "doc_id", "text", n = n)
+        .as[(Long, String)].collect().sorted.toSeq
+      assert(set == truth.map(w => (w._1, w._3)).distinct.sorted, s"n=$n")
+    }
+  }
+
+  test("dupGramStarts marks the slice starts of every 13-gram seen twice") {
+    val (_, dup) = graft.functions.TextAnalysis.dupGramStarts(spark, sf)
+    val w = referenceWindows(graft.sources.Tables.documents(spark, sf), 13)
+      .withColumn("g", graft.Exact.h60(col("shingle")))
+    val truth = w.join(w.groupBy("g").count().filter(col("count") > 1), "g")
+      .select("doc_id", "p").as[(Long, Int)].collect().sorted.toSeq
+    assert(truth.nonEmpty, "fixture should repeat at least one 13-gram")
+    assert(dup.as[(Long, Int)].collect().sorted.toSeq == truth)
   }
 
   test("MinHashSig: interpreted eval, codegen and the Column formula agree") {
@@ -76,7 +132,7 @@ class DedupSimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types.{ArrayType, StringType}
     val truth = formulaSigs(
-      graft.api.Graft.shingleSet(edgeDocs, "doc_id", "text"), 16)
+      referenceWindows(edgeDocs, 3).select("doc_id", "shingle").distinct(), 16)
     val docs = graft.api.Graft.shingleArrays(edgeDocs, "doc_id", "text")
     def sigs(conf: (String, String)*): Map[Long, Seq[Long]] = {
       val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }

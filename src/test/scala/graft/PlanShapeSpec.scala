@@ -132,6 +132,39 @@ class PlanShapeSpec extends SparkSpec {
       s"aggregate keyed on a shingle column: $keys"))
   }
 
+  test("text windows and tokenizers plan no lambda function") {
+    // one tokenizer (array_remove over a split) and one window kernel (a
+    // regex pass) serve these queries: no interpreted higher-order
+    // function runs per token or per window. Their shingle relations
+    // are checkpointed in their own actions, so every execution's
+    // optimized plan is checked, not only the last.
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def lambdas(e: Expression): Seq[Expression] = e.collect { case l: LambdaFunction => l }
+    Seq("q_dedup_ngram_jaccard", "q_dedup_containment", "q_dedup_decontaminate_ngram",
+      "q_text_dupspans", "q_text_source_overlap", "q_text_novelty", "q_wordcount"
+    ).foreach { name =>
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          plans.add(qe.optimizedPlan)
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      // jobsDuring returns once the listener bus has delivered every
+      // event the body posted, execution ends included
+      try jobsDuring(q(name).write.format("noop").mode("overwrite").save())
+      finally spark.listenerManager.unregister(listener)
+      val all = plans.toArray(Array.empty[LogicalPlan]).toSeq
+      assert(all.size >= 1, s"$name: saw no execution")
+      val found = all.flatMap(_.collect { case n => n.expressions.flatMap(lambdas) }.flatten)
+      assert(found.isEmpty, s"$name plans a lambda:\n" + found.mkString("\n"))
+    }
+  }
+
   test("minhash band keys evaluate each document's signature once") {
     // a generator filter inferred on a `keys` column and pushed down
     // through the projections would inline the signature into it once

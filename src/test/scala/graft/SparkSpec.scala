@@ -6,14 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared test session: one JVM-wide SparkSession (getOrCreate), local[4],
   * UTC, small shuffle partitions. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new GraftExtensions()(_))
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Session.builder(cpus = "4").appName("graft-test").getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
 
