@@ -16,7 +16,9 @@ import graft.functions.{AsciiSum, CosineSim}
   * calls. (The reference wires its extension point, the app registry
   * `app_route.py:4-6`, by editing source; this is the Spark-native
   * equivalent surface.) Every session built with it also serves `file:`
-  * through the engine's no-fork local filesystem (sources/LocalFs.scala).
+  * through the engine's no-fork local filesystem (sources/LocalFs.scala)
+  * and runs small recursive CTEs as a driver-side fixpoint
+  * (graftbridge/RecursiveCte.scala).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -64,6 +66,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       graft.sources.LocalFs.install(session.sparkContext.hadoopConfiguration)
       new graft.sources.GraftCatalog.V1FallbackRule(session)
     }
+    ext.injectPlannerStrategy(_ =>
+      org.apache.spark.sql.graftbridge.RecursiveCteStrategy)
   }
 }
 

@@ -21,8 +21,8 @@ object SqlSurface {
     QueryDef(name, sql) { (s, d) => views(s, d, tables: _*); s.sql(sql) }
 
   val defs: Seq[QueryDef] = Seq(
-    QueryDef(
-      "q_sql_revenue_by_nation",
+    sqlBoth("q_sql_revenue_by_nation",
+      Seq("lineitem", "orders", "customer", "nation"))(
       """SELECT n_name,
         |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))), 4) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
@@ -31,25 +31,8 @@ object SqlSurface {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY n_name
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "lineitem", "orders", "customer", "nation")
-      s.sql(
-        """SELECT n_name,
-          |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))), 4) AS DOUBLE) AS revenue,
-          |  count(*) AS n_items
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |GROUP BY n_name
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
-    // Recursive CTE (Spark 4 WITH RECURSIVE): per nation, the smallest
-    // nationkey reachable by walking consecutive keys within its region,
-    // plus the walk length. Edges form chains (each node has at most one
-    // predecessor), so UNION ALL derivations are unique and both engines
-    // terminate at the same fixpoint with identical counts.
     // TPC-H Q3 shape (shipping priority): segment-filtered customer x
     // date-bracketed orders x lineitem, revenue per open order, top 10.
     // The filters sit on three different tables, so this is the plan-
@@ -57,8 +40,7 @@ object SqlSurface {
     // their scans, customer (segment-pruned, ~300 rows) broadcasts, and
     // the ORDER BY ... LIMIT becomes TakeOrderedAndProject — no global
     // sort. Revenue is the exact-decimal sum; doubles leave via round().
-    QueryDef(
-      "q_sql_shipping_priority",
+    sqlBoth("q_sql_shipping_priority", Seq("customer", "orders", "lineitem"))(
       """SELECT l_orderkey, o_orderdate, o_orderpriority,
         |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))), 4) AS DOUBLE) AS revenue
         |FROM customer
@@ -69,21 +51,7 @@ object SqlSurface {
         |  AND l_shipdate > TIMESTAMP '1997-07-01'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
         |ORDER BY revenue DESC, l_orderkey LIMIT 10
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "customer", "orders", "lineitem")
-      s.sql(
-        """SELECT l_orderkey, o_orderdate, o_orderpriority,
-          |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))), 4) AS DOUBLE) AS revenue
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN lineitem ON l_orderkey = o_orderkey
-          |WHERE c_mktsegment = 'BUILDING'
-          |  AND o_orderdate < TIMESTAMP '1997-07-01'
-          |  AND l_shipdate > TIMESTAMP '1997-07-01'
-          |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-          |ORDER BY revenue DESC, l_orderkey LIMIT 10
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // TPC-H Q10 shape (returned items): per-customer lost revenue from
     // returned lineitems, nation attached, top 20 accounts. The return-
@@ -91,8 +59,8 @@ object SqlSurface {
     // broadcast dim; the two fact joins shuffle on their keys and the
     // revenue tie-breaks by unique custkey so the LIMIT is stable in
     // both engines.
-    QueryDef(
-      "q_sql_returned_items",
+    sqlBoth("q_sql_returned_items",
+      Seq("customer", "orders", "lineitem", "nation"))(
       """SELECT c_custkey, c_name, n_name,
         |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))), 4) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
@@ -103,24 +71,15 @@ object SqlSurface {
         |WHERE l_returnflag = 'R'
         |GROUP BY c_custkey, c_name, n_name
         |ORDER BY revenue DESC, c_custkey LIMIT 20
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "customer", "orders", "lineitem", "nation")
-      s.sql(
-        """SELECT c_custkey, c_name, n_name,
-          |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))), 4) AS DOUBLE) AS revenue,
-          |  count(*) AS n_items
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN lineitem ON l_orderkey = o_orderkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |WHERE l_returnflag = 'R'
-          |GROUP BY c_custkey, c_name, n_name
-          |ORDER BY revenue DESC, c_custkey LIMIT 20
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
-    QueryDef(
-      "q_sql_recursive",
+    // Recursive CTE (Spark 4 WITH RECURSIVE): per nation, the smallest
+    // nationkey reachable by walking consecutive keys within its region,
+    // plus the walk length. Edges form chains (each node has at most one
+    // predecessor), so UNION ALL derivations are unique and both engines
+    // terminate at the same fixpoint with identical counts.
+    // Planned as a driver-side fixpoint (graftbridge/RecursiveCte.scala).
+    sqlBoth("q_sql_recursive", Seq("nation"))(
       """WITH RECURSIVE ed AS (
         |  SELECT a.n_nationkey AS i, b.n_nationkey AS j
         |  FROM nation a JOIN nation b
@@ -132,22 +91,7 @@ object SqlSurface {
         |SELECT id AS n_nationkey, min(lbl) AS chain_root,
         |  count(*) AS chain_len
         |FROM walk GROUP BY id
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "nation")
-      s.sql(
-        """WITH RECURSIVE ed AS (
-          |  SELECT a.n_nationkey AS i, b.n_nationkey AS j
-          |  FROM nation a JOIN nation b
-          |    ON b.n_nationkey = a.n_nationkey + 1 AND b.n_regionkey = a.n_regionkey),
-          |walk(id, lbl) AS (
-          |  SELECT n_nationkey, n_nationkey FROM nation
-          |  UNION ALL
-          |  SELECT e.j, w.lbl FROM walk w JOIN ed e ON e.i = w.id)
-          |SELECT id AS n_nationkey, min(lbl) AS chain_root,
-          |  count(*) AS chain_len
-          |FROM walk GROUP BY id
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // TPC-H Q4 shape (order priority checking): orders in a one-year
     // bracket with at least one line shipped after the order date,
@@ -155,8 +99,7 @@ object SqlSurface {
     // on l_orderkey — lineitem contributes at most one match per order
     // and only its join key + predicate columns cross the exchange; the
     // date filter prunes the orders scan before the join.
-    QueryDef(
-      "q_sql_order_priority",
+    sqlBoth("q_sql_order_priority", Seq("orders", "lineitem"))(
       """SELECT o_orderpriority, count(*) AS n_orders
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -164,18 +107,7 @@ object SqlSurface {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
         |GROUP BY o_orderpriority
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "orders", "lineitem")
-      s.sql(
-        """SELECT o_orderpriority, count(*) AS n_orders
-          |FROM orders
-          |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-          |  AND o_orderdate < TIMESTAMP '1998-01-01'
-          |  AND EXISTS (SELECT 1 FROM lineitem
-          |              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-          |GROUP BY o_orderpriority
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // TPC-H Q12 shape (line priority by status): lines shipped in a
     // one-year bracket, split per linestatus into urgent/high vs other
@@ -183,8 +115,7 @@ object SqlSurface {
     // l_shipmode, which this schema lacks; l_linestatus carries the
     // same plan: ship-date filter at the lineitem scan, one shuffle
     // join to orders, two CASE-guarded sums in one aggregate pass).
-    QueryDef(
-      "q_sql_line_priority",
+    sqlBoth("q_sql_line_priority", Seq("lineitem", "orders"))(
       """SELECT l_linestatus,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |           THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -194,28 +125,14 @@ object SqlSurface {
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
         |GROUP BY l_linestatus
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "lineitem", "orders")
-      s.sql(
-        """SELECT l_linestatus,
-          |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-          |           THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-          |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-          |           THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          |  AND l_shipdate < TIMESTAMP '1998-01-01'
-          |GROUP BY l_linestatus
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // TPC-H Q14 shape (promo revenue): the share of one month's revenue
     // from PROMO-typed parts. part (2k rows/sf) broadcasts into the
     // date-pruned lineitem scan; both sums accumulate as exact decimal
     // in ONE aggregate pass and the ratio is a single double division
     // of the two rounded doubles — identical in both engines.
-    QueryDef(
-      "q_sql_promo_revenue",
+    sqlBoth("q_sql_promo_revenue", Seq("lineitem", "part"))(
       """WITH s AS (
         |  SELECT
         |    CAST(round(sum(CASE WHEN p_type = 'PROMO'
@@ -228,23 +145,7 @@ object SqlSurface {
         |SELECT promo_revenue, total_revenue,
         |  100.0 * promo_revenue / total_revenue AS promo_pct
         |FROM s
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "lineitem", "part")
-      s.sql(
-        """WITH s AS (
-          |  SELECT
-          |    CAST(round(sum(CASE WHEN p_type = 'PROMO'
-          |        THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))
-          |        ELSE CAST(0 AS DECIMAL(38,10)) END), 4) AS DOUBLE) AS promo_revenue,
-          |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,10))), 4) AS DOUBLE) AS total_revenue
-          |  FROM lineitem JOIN part ON l_partkey = p_partkey
-          |  WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-          |    AND l_shipdate < TIMESTAMP '1997-10-01')
-          |SELECT promo_revenue, total_revenue,
-          |  100.0 * promo_revenue / total_revenue AS promo_pct
-          |FROM s
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // TPC-H Q18 shape (large-volume customers): orders whose total
     // quantity clears a threshold (~p99 of the per-order distribution),
@@ -253,8 +154,7 @@ object SqlSurface {
     // lineitem whose survivors (≈1% of orders) semi-join back — both
     // engines see a keys-only IN, and the final ORDER BY ... LIMIT is
     // TakeOrderedAndProject with o_orderkey as the unique tie-break.
-    QueryDef(
-      "q_sql_large_orders",
+    sqlBoth("q_sql_large_orders", Seq("customer", "orders", "lineitem"))(
       """SELECT c_custkey, c_name, o_orderkey, o_totalprice,
         |  CAST(round(sum(CAST(l_quantity AS DECIMAL(38,10))), 4) AS DOUBLE) AS total_qty
         |FROM customer
@@ -266,56 +166,24 @@ object SqlSurface {
         |  HAVING sum(CAST(l_quantity AS DECIMAL(38,10))) > 250)
         |GROUP BY c_custkey, c_name, o_orderkey, o_totalprice
         |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "customer", "orders", "lineitem")
-      s.sql(
-        """SELECT c_custkey, c_name, o_orderkey, o_totalprice,
-          |  CAST(round(sum(CAST(l_quantity AS DECIMAL(38,10))), 4) AS DOUBLE) AS total_qty
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN lineitem ON o_orderkey = l_orderkey
-          |WHERE o_orderkey IN (
-          |  SELECT l_orderkey FROM lineitem
-          |  GROUP BY l_orderkey
-          |  HAVING sum(CAST(l_quantity AS DECIMAL(38,10))) > 250)
-          |GROUP BY c_custkey, c_name, o_orderkey, o_totalprice
-          |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // Scalar subquery: Catalyst evaluates the uncorrelated subquery once
     // and broadcasts the scalar — no per-row re-evaluation.
-    QueryDef(
-      "q_sql_scalar_subquery",
+    sqlBoth("q_sql_scalar_subquery", Seq("orders"))(
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_totalprice > 2 * (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE)
         |                                 / count(*) FROM orders)
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "orders")
-      s.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |WHERE o_totalprice > 2 * (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE)
-          |                                 / count(*) FROM orders)
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // Correlated subquery: decorrelated by Catalyst into aggregate + join
     // (no nested-loop re-execution per outer row).
-    QueryDef(
-      "q_sql_correlated_subquery",
+    sqlBoth("q_sql_correlated_subquery", Seq("customer"))(
       """SELECT c_custkey, c_acctbal FROM customer c
         |WHERE c_acctbal > 2 * (SELECT CAST(sum(CAST(c2.c_acctbal AS DECIMAL(38,10))) AS DOUBLE)
         |                              / count(*)
         |                       FROM customer c2 WHERE c2.c_nationkey = c.c_nationkey)
-        |""".stripMargin) { (s, d) =>
-      views(s, d, "customer")
-      s.sql(
-        """SELECT c_custkey, c_acctbal FROM customer c
-          |WHERE c_acctbal > 2 * (SELECT CAST(sum(CAST(c2.c_acctbal AS DECIMAL(38,10))) AS DOUBLE)
-          |                              / count(*)
-          |                       FROM customer c2 WHERE c2.c_nationkey = c.c_nationkey)
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // TPC-H Q7 shape (volume shipping): bilateral trade between two
     // nations per ship year. Five joins, but only two carry volume —

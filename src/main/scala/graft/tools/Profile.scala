@@ -11,9 +11,28 @@ package graft.tools
   * Several queries (or `all`, the whole registry) run one after another
   * in the same session, each for `reps` reps; a failing rep prints
   * `failed` and the run goes on (scripts/fork_count.sh sweeps the
-  * registry this way).
+  * registry this way). After a query's reps, a `drift` line gives the
+  * least-squares slope of rep time over rep number as a fraction of
+  * the median rep (perfbench's pass drift): a clearly negative drift
+  * means the reps are still warming up, and their median is not yet an
+  * A/B figure.
   */
 object Profile {
+  /** least-squares slope of `secs` (two or more) over their index,
+    * over their median */
+  private def drift(secs: Seq[Double]): Double = {
+    val mx = (secs.size - 1) / 2.0
+    val my = secs.sum / secs.size
+    val slope = secs.indices.map(i => (i - mx) * (secs(i) - my)).sum /
+      secs.indices.map(i => (i - mx) * (i - mx)).sum
+    slope / median(secs)
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     val names =
       if (args(0) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
@@ -35,18 +54,23 @@ object Profile {
     graft.Session.warmTables(spark, sfDir)
     for (name <- names) {
       if (doExplain) graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
-      for (r <- 1 to reps) {
+      val secs = (1 to reps).flatMap { r =>
         val t0 = System.nanoTime()
         try {
           graft.SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
-          println(f"[profile] $name rep $r: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          val s = (System.nanoTime() - t0) / 1e9
+          println(f"[profile] $name rep $r: $s%.2f s")
+          Some(s)
         } catch {
           case e: Exception if names.size > 1 =>
             spark.streams.active.foreach(q => scala.util.Try(q.stop()))
             println(s"[profile] $name rep $r: failed (${e.getClass.getSimpleName})")
+            None
         }
       }
+      if (secs.size >= 2)
+        println(f"[profile] $name drift: ${drift(secs)}%+.4f/rep of the median ${median(secs)}%.2f s")
     }
     spark.stop()
   }

@@ -134,16 +134,11 @@ class DedupSimilaritySpec extends SparkSpec {
     val truth = formulaSigs(
       referenceWindows(edgeDocs, 3).select("doc_id", "shingle").distinct(), 16)
     val docs = graft.api.Graft.shingleArrays(edgeDocs, "doc_id", "text")
-    def sigs(conf: (String, String)*): Map[Long, Seq[Long]] = {
-      val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try docs.select(col("doc_id"), MinHashSig.minhash(col("shingles"), 16))
-        .as[(Long, Seq[Long])].collect().toMap
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+    def sigs(conf: (String, String)*): Map[Long, Seq[Long]] =
+      withConf(conf: _*) {
+        docs.select(col("doc_id"), MinHashSig.minhash(col("shingles"), 16))
+          .as[(Long, Seq[Long])].collect().toMap
       }
-    }
     // codegen only: a generated class that fails to compile throws here
     // instead of silently falling back to the interpreted path
     val codegen = sigs("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",

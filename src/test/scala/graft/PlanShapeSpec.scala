@@ -34,6 +34,25 @@ class PlanShapeSpec extends SparkSpec {
     assert(jobsDuring(q("q_sql_shipping_priority")) == 0)
   }
 
+  test("a small recursive CTE runs one job per recursion level") {
+    def warmJobs(df: => org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      jobsDuring(df.collect())
+    }
+    // 6 jobs: the anchor's result job; the one level's two broadcasts
+    // and result job; the final aggregate's shuffle and result job.
+    // Spark's UnionLoopExec (repartition, count and collect per level)
+    // ran 12
+    val recursive = warmJobs(q("q_sql_recursive"))
+    assert(recursive <= 6, s"q_sql_recursive ran $recursive jobs")
+    // every level folds to a LocalRelation: only the final collect runs,
+    // as under Spark's operator (1 job there too)
+    val counter = warmJobs(spark.sql(
+      "WITH RECURSIVE t(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM t WHERE n < 30) " +
+        "SELECT n FROM t"))
+    assert(counter <= 1, s"SELECT 1 counter ran $counter jobs")
+  }
+
   test("dim-dim join is a broadcast hash join") {
     val p = planString("q_join_broadcast")
     assert(p.contains("BroadcastHashJoin"), p)

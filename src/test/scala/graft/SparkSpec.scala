@@ -14,6 +14,17 @@ trait SparkSpec extends AnyFunSuite {
   def q(name: String): org.apache.spark.sql.DataFrame =
     SparkEntry.queries(name)(spark, sf)
 
+  /** `body` with the session confs `conf` set; each is restored after */
+  def withConf[T](conf: (String, String)*)(body: => T): T = {
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Spark jobs `body` launches on this thread. Its jobs carry a fresh
     * job group; a sentinel job in a second group runs after it, and the
     * count is read once the listener has seen the sentinel start — the
