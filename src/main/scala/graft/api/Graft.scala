@@ -189,13 +189,19 @@ object Graft {
   }
 
   /** Exact n-gram Jaccard pairs >= `threshold` via the inverted shingle
-    * index (candidates share >= 1 shingle; no all-pairs product). Callers
-    * with skew-prone corpora should pre-band (see operators.Dedup). */
-  def jaccardPairs(sh: DataFrame, threshold: Double): DataFrame = {
+    * index over `sh` (doc_id, shingle, and the `block` columns):
+    * candidates share >= 1 shingle and every blocking key, so there is
+    * no all-pairs product, and blocking keys (language, length band)
+    * split the hot shingles' posting lists. `sh` is read three times;
+    * pass it materialized. */
+  def jaccardPairs(sh: DataFrame, threshold: Double, block: Seq[String]): DataFrame = {
     val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
-    val a = sh.select(col("doc_id").as("i"), col("shingle"))
-    val b = sh.select(col("doc_id").as("j"), col("shingle").as("shingle_b"))
-    a.join(b, col("shingle") === col("shingle_b") && col("i") < col("j"))
+    val a = sh.select((col("doc_id").as("i") +: block.map(col)) :+ col("shingle"): _*)
+    val b = sh.select((col("doc_id").as("j") +: block.map(c => col(c).as(c + "_b"))) :+
+      col("shingle").as("shingle_b"): _*)
+    val on = block.foldLeft(col("shingle") === col("shingle_b"))((p, c) =>
+      p && col(c) === col(c + "_b"))
+    a.join(b, on && col("i") < col("j"))
       .groupBy("i", "j").agg(count(lit(1)).as("inter"))
       .join(cnt.withColumnRenamed("doc_id", "i").withColumnRenamed("c", "ca"), "i")
       .join(cnt.withColumnRenamed("doc_id", "j").withColumnRenamed("c", "cb"), "j")

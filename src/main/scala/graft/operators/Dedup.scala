@@ -76,26 +76,13 @@ object Dedup {
         |FROM pairs JOIN cnt ca ON ca.doc_id = i JOIN cnt cb ON cb.doc_id = j
         |WHERE CAST(inter AS DOUBLE) / (ca.c + cb.c - inter) >= 0.5
         |""".stripMargin) { (s, d) =>
-      // localCheckpoint, not cache(): materializes once for the three
-      // consumers below, is reclaimed by the ContextCleaner when the plan
+      // localCheckpoint, not cache(): materializes once for jaccardPairs'
+      // three reads, is reclaimed by the ContextCleaner when the plan
       // goes unreferenced, and — unlike a CacheManager entry, which lives
       // until someone unpersists it — doesn't make bench re-measure
       // passes silently skip the shingle build
-      val sh = shingles(s, d).localCheckpoint()
-      val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
-      val a = sh.select(col("doc_id").as("i"), col("lang"), col("band"), col("shingle"))
-      val b = sh.select(col("doc_id").as("j"), col("lang").as("lang_b"),
-        col("band").as("band_b"), col("shingle").as("shingle_b"))
-      val pairs = a.join(b,
-          col("shingle") === col("shingle_b") && col("lang") === col("lang_b")
-            && col("band") === col("band_b") && col("i") < col("j"))
-        .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-      pairs
-        .join(cnt.withColumnRenamed("doc_id", "i").withColumnRenamed("c", "ca"), "i")
-        .join(cnt.withColumnRenamed("doc_id", "j").withColumnRenamed("c", "cb"), "j")
-        .withColumn("jac", col("inter").cast("double") / (col("ca") + col("cb") - col("inter")))
-        .filter(col("jac") >= 0.5)
-        .select("i", "j", "jac")
+      graft.api.Graft.jaccardPairs(shingles(s, d).localCheckpoint(), 0.5,
+        Seq("lang", "band"))
     },
 
     // MinHash(16) + LSH(4 bands x 4 rows) + exact-Jaccard verify on the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.Exact.h60
@@ -56,6 +57,22 @@ object Graph {
   private val MlLvRounds = 1
   private val MlCnmRounds = 1
 
+  /** The derived link graph: one row per edge, doc `src` ->
+    * h60("pr:src:k") mod N for k in 1..4, in columns named `src` and
+    * `dst`; `weighted` adds q_graph_sssp's edge weight
+    * w = h60("wt:src:k") mod 5 + 1. */
+  private def derivedEdges(docs: DataFrame, src: String, dst: String,
+      weighted: Boolean = false): DataFrame = {
+    def slot(tag: String) = h60(concat(lit(tag), col(src).cast("string"),
+      lit(":"), col("k").cast("string")))
+    val n = docs.agg(count(lit(1)).as("n"))
+    docs.crossJoin(broadcast(n))
+      .select(col("doc_id").as(src),
+        explode(sequence(lit(1), lit(4))).as("k"), col("n"))
+      .select(Seq(col(src), (slot("pr:") % col("n")).as(dst)) ++
+        (if (weighted) Seq((slot("wt:") % 5 + 1).as("w")) else Nil): _*)
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // PageRank over the derived link graph. Integer-exact: BIGINT ranks,
@@ -64,13 +81,7 @@ object Graph {
     // bit-for-bit, with no float accumulation order to pin.
     QueryDef("q_graph_pagerank", pagerankOracle(PrIters, PrScale)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("src"),
-          (h60(concat(lit("pr:"), col("src").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("dst"))
+      val edges = derivedEdges(docs, "src", "dst")
       graft.api.Graft.pagerank(
           docs.select(col("doc_id").as("v")), edges, PrIters, PrScale)
         .select(col("v").as("doc_id"), col("rank"))
@@ -83,13 +94,7 @@ object Graph {
     QueryDef("q_graph_pagerank_seeded",
       pagerankSeededOracle(PrIters, PrScale)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("src"),
-          (h60(concat(lit("pr:"), col("src").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("dst"))
+      val edges = derivedEdges(docs, "src", "dst")
       graft.api.Graft.pagerankSeeded(
           docs.select(col("doc_id").as("v"),
             (col("doc_id") % 17 === 0).as("seed")),
@@ -108,13 +113,7 @@ object Graph {
     // nested loop. Integer counts, bit-exact oracle.
     QueryDef("q_graph_triangles", trianglesOracle) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val raw = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("a"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("a"),
-          (h60(concat(lit("pr:"), col("a").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("b"))
+      val raw = derivedEdges(docs, "a", "b")
       graft.api.Graft.triangleCounts(raw)
     },
 
@@ -128,13 +127,7 @@ object Graph {
     // min(dist); hop counts are integers, so the replay is bit-exact.
     QueryDef("q_graph_bfs", bfsOracle(BfsDepth)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("src"),
-          (h60(concat(lit("pr:"), col("src").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("dst"))
+      val edges = derivedEdges(docs, "src", "dst")
       graft.api.Graft.bfs(
           docs.select(col("doc_id").as("v"),
             (col("doc_id") % 17 === 0).as("seed")),
@@ -154,15 +147,7 @@ object Graph {
     // per round.
     QueryDef("q_graph_sssp", ssspOracle(BfsDepth)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("src"),
-          (h60(concat(lit("pr:"), col("src").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("dst"),
-          (h60(concat(lit("wt:"), col("src").cast("string"), lit(":"),
-            col("k").cast("string"))) % 5 + 1).as("w"))
+      val edges = derivedEdges(docs, "src", "dst", weighted = true)
       graft.api.Graft.sssp(
           docs.select(col("doc_id").as("v"),
             (col("doc_id") % 17 === 0).as("seed")),
@@ -188,13 +173,8 @@ object Graph {
         |SELECT in_deg, count(*)::BIGINT AS n_nodes FROM ind GROUP BY in_deg
         |""".stripMargin) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select((h60(concat(lit("pr:"), col("src").cast("string"), lit(":"),
-          col("k").cast("string"))) % col("n")).as("dst"))
-      val inCounts = edges.groupBy("dst").agg(count(lit(1)).as("c"))
+      val inCounts = derivedEdges(docs, "src", "dst")
+        .groupBy("dst").agg(count(lit(1)).as("c"))
       docs.select(col("doc_id"))
         .join(inCounts, col("doc_id") === col("dst"), "left")
         .select(coalesce(col("c"), lit(0L)).as("in_deg"))
@@ -213,13 +193,7 @@ object Graph {
     // Graft.kcore, property-pinned against a driver-side reference.
     QueryDef("q_graph_kcore", kcoreOracle(KcoreK, KcoreRounds)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val raw = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("a"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("a"),
-          (h60(concat(lit("pr:"), col("a").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("b"))
+      val raw = derivedEdges(docs, "a", "b")
       graft.api.Graft.kcorePeel(
           docs.select(col("doc_id").as("v")), raw, KcoreK, KcoreRounds)
         .select(col("v").as("doc_id"), col("core_deg"))
@@ -257,13 +231,7 @@ object Graph {
          |FROM cand JOIN deg da ON da.v = na JOIN deg db ON db.v = nb
          |""".stripMargin) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val raw = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("a"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("a"),
-          (h60(concat(lit("pr:"), col("a").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("b"))
+      val raw = derivedEdges(docs, "a", "b")
       graft.api.Graft.linkPredict(raw, minCommon = 2)
     },
 
@@ -279,13 +247,7 @@ object Graph {
     // linear work, the CC/kcore iteration discipline.
     QueryDef("q_graph_labelprop", labelPropOracle(LpRounds)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val raw = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("a"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("a"),
-          (h60(concat(lit("pr:"), col("a").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("b"))
+      val raw = derivedEdges(docs, "a", "b")
       graft.api.Graft.labelProp(
           docs.select(col("doc_id").as("v")), raw, LpRounds)
         .select(col("v").as("doc_id"), col("lbl").as("community"))
@@ -301,13 +263,7 @@ object Graph {
     // same degree/intra-edge aggregates.
     QueryDef("q_graph_modularity", modularityOracle(LpRounds)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val raw = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("a"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("a"),
-          (h60(concat(lit("pr:"), col("a").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("b"))
+      val raw = derivedEdges(docs, "a", "b")
       // derive the undirected context ONCE; seed and score share it
       val ctx = graft.api.Graft.undCtx(raw)
       val labels = graft.api.Graft.labelPropCtx(
@@ -329,13 +285,7 @@ object Graph {
     // the monotonicity verdict.
     QueryDef("q_graph_louvain", louvainOracle(LpRounds, LvRounds)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val raw = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("a"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("a"),
-          (h60(concat(lit("pr:"), col("a").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("b"))
+      val raw = derivedEdges(docs, "a", "b")
       // ONE undirected-context derivation feeds seed, refine, and both
       // modularity reports — the pipeline shape a 100 TB job uses
       // (undCtx materializes the canonical edge set itself, so `raw`
@@ -365,13 +315,7 @@ object Graph {
     // plus the seed Q and the monotonicity verdict.
     QueryDef("q_graph_cnm", cnmOracle(LpRounds, CnmRounds)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val raw = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("a"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("a"),
-          (h60(concat(lit("pr:"), col("a").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("b"))
+      val raw = derivedEdges(docs, "a", "b")
       // shared undirected context, as in q_graph_louvain (raw is read
       // exactly once — by undCtx's own materialization)
       val ctx = graft.api.Graft.undCtx(raw)
@@ -398,13 +342,7 @@ object Graph {
     QueryDef("q_graph_multilevel",
       multilevelOracle(LpRounds, MlLvRounds, MlCnmRounds)) { (s, d) =>
       val docs = documents(s, d)
-      val n = docs.agg(count(lit(1)).as("n"))
-      val raw = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("a"),
-          explode(sequence(lit(1), lit(4))).as("k"), col("n"))
-        .select(col("a"),
-          (h60(concat(lit("pr:"), col("a").cast("string"), lit(":"),
-            col("k").cast("string"))) % col("n")).as("b"))
+      val raw = derivedEdges(docs, "a", "b")
       val ctx = graft.api.Graft.undCtx(raw)
       val seed = graft.api.Graft.labelPropCtx(
         docs.select(col("doc_id").as("v")), ctx, LpRounds)

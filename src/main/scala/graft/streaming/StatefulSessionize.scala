@@ -40,7 +40,6 @@ object StatefulSessionize {
   def closedSessions(s: SparkSession, eventsDir: String, gapUs: Long): DataFrame = {
     import s.implicits._
     val schema = s.read.parquet(eventsDir).schema
-    val name = "sessions_" + java.util.UUID.randomUUID.toString.replace("-", "")
 
     def step(uid: Long, evs: Iterator[SessEv],
         state: GroupState[SessState]): Iterator[ClosedSession] = {
@@ -62,15 +61,13 @@ object StatefulSessionize {
       out.result().iterator
     }
 
-    val q = s.readStream.schema(schema)
+    Streaming.toMemory(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // one file per micro-batch
       .parquet(eventsDir)
       .select(col("user_id"), col("event_id"), col("ts_us"))
       .as[SessEv]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    graft.streaming.Streaming.drain(q)
-    s.table(name)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step),
+      "append")
   }
 }

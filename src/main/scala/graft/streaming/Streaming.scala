@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.StructType
 import graft.QueryDef
 
 /** Structured Streaming layer. The reference is strictly batch with
@@ -14,14 +15,23 @@ import graft.QueryDef
   * watermark bounding state; for the bounded-replay check we use complete
   * mode so the full result is observable. State is keyed by
   * (window, event_type) — partitioned by the shuffle like any groupBy.
+  *
+  * Every bounded-replay stream runs through one of two helpers, and
+  * through nothing else: [[toMemory]] (a memory sink whose rows come
+  * back as a DataFrame) and [[foldBatches]] (a `foreachBatch` fold over
+  * the micro-batches). Both start the query, wait for it through
+  * [[drain]] and stop it; neither leaves an active query or a session
+  * view behind, on success or on failure.
   */
 object Streaming {
+
+  private val DrainTimeoutMs = 180000L
 
   /** Drain a bounded-replay stream with a hard timeout: a wedged
     * micro-batch must fail ONE query, not hang the whole Verify run (the
     * driver's correctness gate dumps nothing if the JVM never exits). */
   def drain(q: org.apache.spark.sql.streaming.StreamingQuery,
-      timeoutMs: Long = 180000L): Unit =
+      timeoutMs: Long = DrainTimeoutMs): Unit =
     try {
       val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
       val t = new Thread(() => try q.processAllAvailable()
@@ -36,18 +46,92 @@ object Streaming {
       if (failure.get() != null) throw failure.get()
     } finally q.stop()
 
-  /** Driver-side accumulator written by the micro-batch thread inside
-    * `foreachBatch` and read on the caller thread after [[drain]]. The
-    * field is `@volatile` so cross-thread visibility is guaranteed by
-    * the JMM itself, not by the streaming engine's incidental
-    * happens-before at query termination. Writes are single-threaded
-    * (foreachBatch invocations are serial within one query), so a plain
-    * volatile store suffices — no CAS needed. */
-  private final class BatchAcc[A](init: A) {
-    @volatile private[this] var cur: A = init
-    def get: A = cur
-    def set(a: A): Unit = cur = a
+  /** Run `ds` into a memory sink until it has consumed everything
+    * available and return the sink's rows. The sink's session view is
+    * dropped before this returns, also when the stream fails: the
+    * returned plan reads the sink itself, so the rows live exactly as
+    * long as the caller holds the DataFrame. */
+  private[graft] def toMemory(ds: Dataset[_], outputMode: String): DataFrame =
+    toMemoryCounted(ds, outputMode)._1
+
+  /** [[toMemory]], plus the number of micro-batches that read input rows */
+  private[graft] def toMemoryCounted(ds: Dataset[_],
+      outputMode: String): (DataFrame, Int) = {
+    val name = "stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val q = ds.writeStream.outputMode(outputMode).format("memory")
+      .queryName(name).start()
+    try {
+      drain(q)
+      (ds.sparkSession.table(name), q.recentProgress.count(_.numInputRows > 0))
+    } finally ds.sparkSession.catalog.dropTempView(name)
   }
+
+  /** Fold the micro-batches of `df` into `zero` until the stream has
+    * consumed everything available; returns the fold and the number of
+    * micro-batches it took. `step` gets the fold so far, the batch and
+    * its batch id; it runs on the stream's thread, one batch at a time. */
+  private[graft] def foldBatches[A](df: DataFrame, zero: A,
+      timeoutMs: Long = DrainTimeoutMs)(step: (A, DataFrame, Long) => A): (A, Int) = {
+    // written by the micro-batch thread, read here after drain: the
+    // reference's volatile get/set make the hand-off visible by the JMM
+    // itself, not by the engine's incidental happens-before at query
+    // termination (batches run one at a time, so no CAS is needed)
+    val acc = new java.util.concurrent.atomic.AtomicReference((zero, 0))
+    val q = df.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val (a, n) = acc.get
+        acc.set((step(a, batch, batchId), n + 1))
+      }
+      .start()
+    drain(q, timeoutMs)
+    acc.get
+  }
+
+  /** The parquet files under `dir` whose names match `glob`, as a
+    * stream; `maxFilesPerTrigger` > 0 caps the files per micro-batch. */
+  private def fileFeed(s: SparkSession, schema: StructType, dir: String,
+      glob: String, maxFilesPerTrigger: Int = 0): DataFrame = {
+    val reader = s.readStream.schema(schema).option("pathGlobFilter", glob)
+    if (maxFilesPerTrigger > 0)
+      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+    reader.parquet(dir)
+  }
+
+  /** The sf dir's events table as a stream, in its raw file schema (the
+    * file-stream source wants a directory: it streams the sf dir, globbed
+    * down to the table's file). */
+  private def eventsFeed(s: SparkSession, d: String): DataFrame =
+    fileFeed(s, graft.sources.Tables.eventsFileSchema(s, d), d, "events.parquet")
+
+  /** A bus topic replayed as a stream in about `batches` micro-batches
+    * (admission cap: total records / batches + 1 per trigger), each
+    * comma-separated line split into `fields`: a column name and the
+    * type its text casts to ("string" keeps the text). */
+  private def busFeed(s: SparkSession, topic: String, batches: Int,
+      fields: (String, String)*): DataFrame = {
+    val total = FileBus.endOffsets(topic).values.sum
+    s.readStream.format(classOf[FileBusProvider].getName)
+      .option("path", topic)
+      .option("maxRecordsPerTrigger", math.max(1L, total / batches + 1L).toString)
+      .load()
+      .select(lineFields(fields: _*): _*)
+  }
+
+  /** the keyed CDC topic as (user_id, event_id, v) */
+  private def keyedFeed(s: SparkSession, d: String, batches: Int): DataFrame =
+    busFeed(s, FileBusFixture.ensureKeyedTopic(s, d), batches,
+      "user_id" -> "long", "event_id" -> "long", "v" -> "double")
+
+  /** the cardinality topic as (event_type, user_id) */
+  private def cardinalityFeed(s: SparkSession, d: String, batches: Int): DataFrame =
+    busFeed(s, FileBusFixture.ensureCardinalityTopic(s, d), batches,
+      "event_type" -> "string", "user_id" -> "long")
+
+  private def lineFields(fields: (String, String)*): Seq[Column] =
+    fields.zipWithIndex.map { case ((name, tpe), i) =>
+      val f = split(col("value"), ",").getItem(i)
+      (if (tpe == "string") f else f.cast(tpe)).as(name)
+    }
 
   /** Run `body` with a bounded-replay-sized shuffle-partition count, then
     * restore. A streaming query spins up one state-store instance per
@@ -63,20 +147,13 @@ object Streaming {
   }
 
   def tumblingStream(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
-    val name = "stream_tumbling_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    // the file-stream source wants a directory: stream the sf dir, glob
-    // down to the events table
-    val agg = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+    toMemory(eventsFeed(s, d)
       .transform(graft.sources.Tables.withEventTs)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.Exact.decOut(sum(col("value").cast("decimal(38,10)"))).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-    val q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name)
+        col("n"), col("sum_value")), "complete")
   }
 
   /** Stateful streaming sessionization over the REAL events table: the
@@ -88,7 +165,6 @@ object Streaming {
   def sessionStream(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = "stream_sessions_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val gapUs = 1800000000L
 
     def step(uid: Long, evs: Iterator[SessEv],
@@ -111,17 +187,14 @@ object Streaming {
       out.result().iterator
     }
 
-    val q = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+    toMemory(eventsFeed(s, d)
       .transform(graft.sources.Tables.withEventTs)
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"))
       .as[SessEv]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step),
+      "append")
       .select(col("user_id"), col("session_id"), col("n_events"),
         col("session_start_us"))
   }
@@ -164,11 +237,9 @@ object Streaming {
   }
 
   private def purchaseClickJoinInner(s: SparkSession, d: String): DataFrame = {
-    val name = "stream_ssj_" + java.util.UUID.randomUUID.toString.replace("-", "")
     // one streaming source, two filter branches (stream self-join) — the
     // file source is scanned once per micro-batch, not once per side
-    val src = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+    val src = eventsFeed(s, d)
       .transform(graft.sources.Tables.withEventTs)
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
@@ -182,10 +253,7 @@ object Streaming {
       col("p_user") === col("c_user")
         && col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES")
         && col("c_ts") <= col("p_ts"))
-    val q = joined.select("p_id", "c_id")
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name)
+    toMemory(joined.select("p_id", "c_id"), "append")
   }
 
   /** Stream-stream LEFT OUTER join with watermark expiry: same
@@ -198,9 +266,7 @@ object Streaming {
     * int64 on both compare paths (a NULL would coerce pandas to float64).
     */
   def purchaseClickLeftJoin(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val name = "stream_ssjl_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val src = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+    val src = eventsFeed(s, d)
       .transform(graft.sources.Tables.withEventTs)
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
@@ -215,10 +281,8 @@ object Streaming {
         && col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES")
         && col("c_ts") <= col("p_ts"),
       "left_outer")
-    val q = joined.select(col("p_id"), coalesce(col("c_id"), lit(-1L)).as("c_id"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name)
+    toMemory(joined.select(col("p_id"),
+      coalesce(col("c_id"), lit(-1L)).as("c_id")), "append")
   }
 
   /** Streaming deduplication: first-arrival keep on (user_id, event_type).
@@ -227,14 +291,9 @@ object Streaming {
     * emitting only the key columns makes the result order-insensitive —
     * exactly SELECT DISTINCT in batch. */
   def streamDedup(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
-    val name = "stream_dedup_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+    toMemory(eventsFeed(s, d)
       .select(col("user_id"), col("event_type"))
-      .dropDuplicates("user_id", "event_type")
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name)
+      .dropDuplicates("user_id", "event_type"), "append")
   }
 
   /** Streaming decontamination — the stream-static rung of the LLM-data
@@ -254,15 +313,11 @@ object Streaming {
     val docs = graft.sources.Tables.documents(s, d)
     val evalFp = docs.filter(col("doc_id") % 50 === 0)
       .select(Graft.contentFp(col("text")).as("fp")).distinct()
-    val name = "stream_decon_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
+    toMemory(fileFeed(s, docs.schema, d, "documents.parquet")
       .filter(col("doc_id") % 50 =!= 0)
       .select(col("doc_id"), Graft.contentFp(col("text")).as("fp"))
-      .join(broadcast(evalFp), Seq("fp"), "left_anti")
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name).select("doc_id", "fp")
+      .join(broadcast(evalFp), Seq("fp"), "left_anti"), "append")
+      .select("doc_id", "fp")
   }
 
   /** The q_stream_bpe_encode body: batch-train the BPE vocab, stream
@@ -279,16 +334,11 @@ object Streaming {
           .groupBy("w").agg(count(lit(1)).as("cnt")),
         graft.functions.TextAnalysis.BpeMerges)._2
       .select(col("w"), size(col("syms")).cast("long").as("n"))
-    val name = "stream_bpe_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
+    toMemory(fileFeed(s, docs.schema, d, "documents.parquet")
       .select(col("doc_id"), explode(Graft.tokens(col("text"))).as("w"))
       .join(broadcast(vocab), "w")
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"), sum("n").as("n_bpe_tokens"))
-      .writeStream.outputMode("complete").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name)
+      .agg(count(lit(1)).as("n_words"), sum("n").as("n_bpe_tokens")), "complete")
   }
 
   /** The q_stream_mixture body: pre-flight mixture/budget monitor at
@@ -307,12 +357,10 @@ object Streaming {
   def mixtureStream(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
     import graft.api.Graft
     val docs = graft.sources.Tables.documents(s, d)
-    val name = "stream_mix_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val r = when(col("lang") === "en", 150L).when(col("lang") === "de", 100L)
       .when(col("lang") === "fr", 50L).when(col("lang") === "es", 25L)
       .when(col("lang") === "zh", 10L).otherwise(0L)
-    val q = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
+    toMemory(fileFeed(s, docs.schema, d, "documents.parquet")
       .select(col("lang"), col("doc_id"),
         size(Graft.tokens(col("text"))).cast("long").as("n_tok"))
       .withColumn("r", r)
@@ -322,10 +370,7 @@ object Streaming {
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("raw_tokens"),
         sum("copies").as("mix_docs"),
-        sum(col("copies") * col("n_tok")).as("mix_tokens"))
-      .writeStream.outputMode("complete").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name)
+        sum(col("copies") * col("n_tok")).as("mix_tokens")), "complete")
       .select(col("lang"), col("n_docs"), col("raw_tokens"), col("mix_docs"),
         col("mix_tokens"), lit(20000L).as("budget"),
         (col("mix_tokens") > 20000L).as("over_budget"),
@@ -336,16 +381,11 @@ object Streaming {
     * overlapping 2h windows (1h slide) — same shape as the tumbling
     * stream, ~2x the state keys; shares the batch twin's oracle. */
   def slidingStream(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 8) {
-    val name = "stream_sliding_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = s.readStream.schema(graft.sources.Tables.eventsFileSchema(s, d))
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+    toMemory(eventsFeed(s, d)
       .transform(graft.sources.Tables.withEventTs)
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("ws"), col("event_type"), col("n"))
-      .writeStream.outputMode("complete").format("memory").queryName(name).start()
-    drain(q)
-    s.table(name)
+      .select(col("window.start").as("ws"), col("event_type"), col("n")), "complete")
   }
 
   /** Live EXTERNAL ingestion: lines arriving over TCP (Spark's built-in
@@ -417,34 +457,18 @@ object Streaming {
   private[graft] def streamUpsertCounted(s: SparkSession, d: String,
       batches: Int = 3): (DataFrame, Int) = withStatePartitions(s, 4) {
     import s.implicits._
-    val topic = FileBusFixture.ensureKeyedTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
-    val state = new BatchAcc[DataFrame](Seq.empty[(Long, Long, Double)]
-      .toDF("user_id", "event_id", "v"))
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(0).cast("long").as("user_id"),
-        split(col("value"), ",").getItem(1).cast("long").as("event_id"),
-        split(col("value"), ",").getItem(2).cast("double").as("v"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    foldBatches(keyedFeed(s, d, batches),
+        Seq.empty[(Long, Long, Double)].toDF("user_id", "event_id", "v")) {
+      (state, batch, _) =>
         val changes = batch
           .groupBy(col("user_id"))
           .agg(max(col("event_id")).as("event_id"),
             max_by(col("v"), col("event_id")).as("v"))
           .withColumn("op",
             when(col("event_id") % 29 === 0, lit("D")).otherwise(lit("U")))
-        state.set(graft.api.Graft.merge(state.get, changes, "user_id")
-          .drop("op").localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
-    (state.get, applied.get)
+        graft.api.Graft.merge(state, changes, "user_id")
+          .drop("op").localCheckpoint()
+    }
   }
 
   def streamUpsert(s: SparkSession, d: String): DataFrame =
@@ -472,11 +496,6 @@ object Streaming {
       batches: Int = 1): (DataFrame, Int) = withStatePartitions(s, 4) {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val topic = FileBusFixture.ensureKeyedTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
-    val name = "stream_ewma_" + java.util.UUID.randomUUID.toString.replace("-", "")
-
     def step(uid: Long, evs: Iterator[EwmaEv],
         state: GroupState[EwmaState]): EwmaOut = {
       val sorted = evs.toVector.sortBy(_.event_id)
@@ -490,21 +509,12 @@ object Streaming {
       EwmaOut(uid, st.n, st.acc)
     }
 
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(0).cast("long").as("user_id"),
-        split(col("value"), ",").getItem(1).cast("long").as("event_id"),
-        split(col("value"), ",").getItem(2).cast("double").as("value"))
-      .as[EwmaEv]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
-      .writeStream.outputMode("update").format("memory").queryName(name)
-      .start()
-    drain(q)
-    val applied = q.recentProgress.count(_.numInputRows > 0)
-    (s.table(name).groupBy("user_id")
+    val (updates, applied) = toMemoryCounted(
+      keyedFeed(s, d, batches).withColumnRenamed("v", "value")
+        .as[EwmaEv]
+        .groupByKey(_.user_id)
+        .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step), "update")
+    (updates.groupBy("user_id")
       .agg(max(col("n_events")).as("n_events"),
         max_by(col("ewma_value"), col("n_events")).as("ewma_value")),
       applied)
@@ -532,25 +542,13 @@ object Streaming {
       batches: Int = 3): (DataFrame, Int) = withStatePartitions(s, 4) {
     import s.implicits._
     import graft.Exact
-    val topic = FileBusFixture.ensureKeyedTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
     val zeroDec = Exact.dec(lit(0.0))
-    val keyState = new BatchAcc[DataFrame](Seq.empty[(Long, Long, Double)]
-      .toDF("user_id", "event_id", "v"))
-    val view = new BatchAcc[DataFrame](
-      Seq.empty[(Long, Long)].toDF("cohort", "n_users")
-        .withColumn("sum_v", zeroDec))
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(0).cast("long").as("user_id"),
-        split(col("value"), ",").getItem(1).cast("long").as("event_id"),
-        split(col("value"), ",").getItem(2).cast("double").as("v"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val emptyView = Seq.empty[(Long, Long)].toDF("cohort", "n_users")
+      .withColumn("sum_v", zeroDec)
+    val emptyKeys = Seq.empty[(Long, Long, Double)].toDF("user_id", "event_id", "v")
+    val ((view, _), applied) = foldBatches(keyedFeed(s, d, batches),
+        (emptyView, emptyKeys)) {
+      case ((view, keyState), batch, _) =>
         val changes = batch
           .groupBy(col("user_id"))
           .agg(max(col("event_id")).as("event_id"),
@@ -558,7 +556,7 @@ object Streaming {
           .withColumn("op",
             when(col("event_id") % 29 === 0, lit("D")).otherwise(lit("U")))
           .localCheckpoint() // feeds retraction, insertion, key merge
-        val retract = keyState.get
+        val retract = keyState
           .join(changes.select("user_id"), Seq("user_id"), "left_semi")
           .select((col("user_id") % 10).as("cohort"),
             lit(-1L).as("dn"), (zeroDec - Exact.dec(col("v"))).as("dv"))
@@ -567,22 +565,19 @@ object Streaming {
             lit(1L).as("dn"), Exact.dec(col("v")).as("dv"))
         val delta = retract.unionByName(insert)
           .groupBy("cohort").agg(sum("dn").as("dn"), sum("dv").as("dv"))
-        view.set(view.get.join(delta, Seq("cohort"), "full_outer")
+        (view.join(delta, Seq("cohort"), "full_outer")
           .select(col("cohort"),
             (coalesce(col("n_users"), lit(0L)) +
               coalesce(col("dn"), lit(0L))).as("n_users"),
             (coalesce(col("sum_v"), zeroDec) +
               coalesce(col("dv"), zeroDec)).as("sum_v"))
-          .localCheckpoint())
-        keyState.set(graft.api.Graft.merge(keyState.get, changes, "user_id")
+          .localCheckpoint(),
+         graft.api.Graft.merge(keyState, changes, "user_id")
           .drop("op").localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
-    (view.get.filter(col("n_users") > 0)
+    }
+    (view.filter(col("n_users") > 0)
       .select(col("cohort"), col("n_users"),
-        graft.Exact.decOut(col("sum_v")).as("sum_v")), applied.get)
+        graft.Exact.decOut(col("sum_v")).as("sum_v")), applied)
   }
 
   def streamIvm(s: SparkSession, d: String): DataFrame =
@@ -612,44 +607,34 @@ object Streaming {
   private[graft] def streamRetentionCounted(s: SparkSession, d: String,
       batches: Int = 3): (DataFrame, Int) = withStatePartitions(s, 4) {
     import s.implicits._
-    val topic = FileBusFixture.ensureRetentionTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
     val WeekUs = 604800000000L
     val OriginUs = 1704067200000000L // 2024-01-01, the batch query's origin
-    val pairState = new BatchAcc[DataFrame](
-      Seq.empty[(Long, Long)].toDF("user_id", "week"))
-    val cohortState = new BatchAcc[DataFrame](
+    val zero = (
+      Seq.empty[(Long, Long, Long)].toDF("cohort_week", "offset_weeks", "n_users"),
+      Seq.empty[(Long, Long)].toDF("user_id", "week"),
       Seq.empty[(Long, Long)].toDF("user_id", "cohort_week"))
-    val view = new BatchAcc[DataFrame](Seq.empty[(Long, Long, Long)]
-      .toDF("cohort_week", "offset_weeks", "n_users"))
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(0).cast("long").as("user_id"),
-        split(col("value"), ",").getItem(1).cast("long").as("ts_us"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val ((view, _, _), applied) = foldBatches(
+        busFeed(s, FileBusFixture.ensureRetentionTopic(s, d), batches,
+          "user_id" -> "long", "ts_us" -> "long"), zero) {
+      case ((view, pairState, cohortState), batch, _) =>
         val batchW = batch
           .select(col("user_id"),
             expr(s"(ts_us - ${OriginUs}L) div ${WeekUs}L").as("week"))
           .distinct()
         val newPairs = batchW
-          .join(pairState.get, Seq("user_id", "week"), "left_anti")
+          .join(pairState, Seq("user_id", "week"), "left_anti")
           .localCheckpoint() // feeds cohort move, insertion, state union
         // per touched user: old cohort (if any) vs min incoming week
         val affected = newPairs.groupBy("user_id")
           .agg(min("week").as("new_min"))
-          .join(cohortState.get, Seq("user_id"), "left")
+          .join(cohortState, Seq("user_id"), "left")
           .select(col("user_id"), col("cohort_week").as("old_c"),
             when(col("cohort_week").isNull ||
               col("new_min") < col("cohort_week"), col("new_min"))
               .otherwise(col("cohort_week")).as("new_c"))
           .localCheckpoint() // feeds retraction, insertion, cohort merge
         // movers: every EXISTING cell migrates old cohort -> new cohort
-        val moverPairs = pairState.get.join(
+        val moverPairs = pairState.join(
           affected.filter(col("old_c").isNotNull && col("new_c") < col("old_c")),
           Seq("user_id"))
         val retract = moverPairs.select(col("old_c").as("cohort_week"),
@@ -661,23 +646,19 @@ object Streaming {
             (col("week") - col("new_c")).as("offset_weeks"), lit(1L).as("dn"))
         val delta = retract.unionByName(reinsert).unionByName(insert)
           .groupBy("cohort_week", "offset_weeks").agg(sum("dn").as("dn"))
-        view.set(
-          view.get.join(delta, Seq("cohort_week", "offset_weeks"), "full_outer")
-            .select(col("cohort_week"), col("offset_weeks"),
-              (coalesce(col("n_users"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n_users"))
-            .localCheckpoint())
-        pairState.set(pairState.get.unionByName(newPairs).localCheckpoint())
-        cohortState.set(cohortState.get
+        (view.join(delta, Seq("cohort_week", "offset_weeks"), "full_outer")
+          .select(col("cohort_week"), col("offset_weeks"),
+            (coalesce(col("n_users"), lit(0L)) +
+              coalesce(col("dn"), lit(0L))).as("n_users"))
+          .localCheckpoint(),
+         pairState.unionByName(newPairs).localCheckpoint(),
+         cohortState
           .join(affected.select("user_id"), Seq("user_id"), "left_anti")
           .unionByName(
             affected.select(col("user_id"), col("new_c").as("cohort_week")))
           .localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
-    (view.get.filter(col("n_users") > 0), applied.get)
+    }
+    (view.filter(col("n_users") > 0), applied)
   }
 
   def streamRetention(s: SparkSession, d: String): DataFrame =
@@ -700,24 +681,14 @@ object Streaming {
   private[graft] def streamQualityCounted(s: SparkSession, d: String,
       batches: Int = 3): (DataFrame, Int) = withStatePartitions(s, 4) {
     import s.implicits._
-    val topic = FileBusFixture.ensureTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
     val janStartUs = 1704067200000000L // 2024-01-01T00:00:00Z
     val febStartUs = 1706745600000000L // 2024-02-01T00:00:00Z
-    val totals = new BatchAcc[DataFrame](Seq.empty[(String, Long)]
-      .toDF("constraint_name", "violations"))
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(0).cast("long").as("ts_us"),
-        split(col("value"), ",").getItem(1).as("event_type"),
-        split(col("value"), ",").getItem(2).cast("double").as("v"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        def viol(p: org.apache.spark.sql.Column) =
+    val (totals, applied) = foldBatches(
+        busFeed(s, FileBusFixture.ensureTopic(s, d), batches,
+          "ts_us" -> "long", "event_type" -> "string", "v" -> "double"),
+        Seq.empty[(String, Long)].toDF("constraint_name", "violations")) {
+      (totals, batch, _) =>
+        def viol(p: Column) =
           sum(when(p, 1L).otherwise(0L))
         val delta = batch.agg(
             viol(!col("event_type").isin(
@@ -732,17 +703,14 @@ object Streaming {
               |  'no_error_events', no_error_events,
               |  'value_range', value_range,
               |  'ts_window', ts_window) AS (constraint_name, d)""".stripMargin))
-        totals.set(totals.get.join(delta, Seq("constraint_name"), "full_outer")
+        totals.join(delta, Seq("constraint_name"), "full_outer")
           .select(col("constraint_name"),
             (coalesce(col("violations"), lit(0L)) +
               coalesce(col("d"), lit(0L))).as("violations"))
-          .localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
-    (totals.get.select(col("constraint_name"), col("violations"),
-      (col("violations") === 0L).as("pass")), applied.get)
+          .localCheckpoint()
+    }
+    (totals.select(col("constraint_name"), col("violations"),
+      (col("violations") === 0L).as("pass")), applied)
   }
 
   def streamQuality(s: SparkSession, d: String): DataFrame =
@@ -765,11 +733,7 @@ object Streaming {
       batches: Int = 3): (DataFrame, Int) = withStatePartitions(s, 4) {
     import s.implicits._
     val topic = FileBusFixture.ensureTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
-    def parse(df: DataFrame): DataFrame = df
-      .select(split(col("value"), ",").getItem(1).as("event_type"),
-        split(col("value"), ",").getItem(2).cast("double").as("v"))
+    val fields = Seq("ts_us" -> "long", "event_type" -> "string", "v" -> "double")
     def bins(df: DataFrame, planted: Boolean): DataFrame = df
       .select(col("event_type"),
         floor((if (planted)
@@ -778,32 +742,23 @@ object Streaming {
           else col("v")) / 50.0).cast("long").as("bin"))
       .groupBy("event_type", "bin").agg(count(lit(1)).as("c"))
     // reference histogram: the same topic read as a batch, unscaled
-    val ref = bins(parse(s.read.format(classOf[FileBusProvider].getName)
-      .option("path", topic).load().select(col("value"))), planted = false)
+    val ref = bins(s.read.format(classOf[FileBusProvider].getName)
+      .option("path", topic).load().select(lineFields(fields: _*): _*),
+      planted = false)
       .localCheckpoint()
-    val curHist = new BatchAcc[DataFrame](Seq.empty[(String, Long, Long)]
-      .toDF("event_type", "bin", "c"))
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        curHist.set(curHist.get
-          .unionByName(bins(parse(batch), planted = true))
+    val (curHist, applied) = foldBatches(busFeed(s, topic, batches, fields: _*),
+        Seq.empty[(String, Long, Long)].toDF("event_type", "bin", "c")) {
+      (curHist, batch, _) =>
+        curHist.unionByName(bins(batch, planted = true))
           .groupBy("event_type", "bin").agg(sum("c").as("c"))
-          .localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
+          .localCheckpoint()
+    }
     // scale-free fence: drifted when L1 exceeds 5% of the type's row
     // count (sum of reference bin counts) — integer arithmetic, holds at
     // any sf; an absolute threshold would silently stop firing at small
     // scales and saturate at large ones
     val l1 = ref.select(col("event_type"), col("bin"), col("c").as("rc"))
-      .join(curHist.get.select(col("event_type"), col("bin"), col("c").as("cc")),
+      .join(curHist.select(col("event_type"), col("bin"), col("c").as("cc")),
         Seq("event_type", "bin"), "full_outer")
       .groupBy("event_type")
       .agg(sum(abs(coalesce(col("rc"), lit(0L)) - coalesce(col("cc"), lit(0L))))
@@ -811,7 +766,7 @@ object Streaming {
         sum(coalesce(col("rc"), lit(0L))).as("n"))
       .select(col("event_type"), col("l1_dist"),
         (col("l1_dist") * 20L > col("n")).as("drifted"))
-    (l1, applied.get)
+    (l1, applied)
   }
 
   def streamDrift(s: SparkSession, d: String): DataFrame =
@@ -867,15 +822,11 @@ object Streaming {
     def fold(df: DataFrame): DataFrame = df
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
-    val state = new BatchAcc[DataFrame](null)
-    val lastV = new BatchAcc[Long](0L)
-    val applied = new BatchAcc(0)
-    val reader = s.readStream.schema(docs.schema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val q = reader.parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // the fold: (running totals, last committed version)
+    val ((_, lastV), applied) = foldBatches(
+        fileFeed(s, docs.schema, srcDir, glob, maxFilesPerTrigger),
+        (null: DataFrame, 0L)) {
+      case ((prev, _), batch, batchId) =>
         val delta = fold(batch)
         // RESTART-SAFE fold: a null state means this JVM has no running
         // fold — a fresh query, or a restarted one. Seed it from the
@@ -883,20 +834,19 @@ object Streaming {
         // stamp alone would keep the version history replay-clean while
         // post-restart totals silently missed every pre-crash batch
         // (clean-looking history over wrong data — the worse failure).
-        if (state.get == null) {
-          val cur = Snapshots.currentVersion(s, dir)
-          if (cur >= 1) {
-            state.set(Snapshots.read(s, dir, "lang", cur)
-              .select("lang", "n_docs", "n_chars").localCheckpoint())
-            lastV.set(cur)
+        val state =
+          if (prev != null) prev
+          else {
+            val cur = Snapshots.currentVersion(s, dir)
+            if (cur < 1) null
+            else Snapshots.read(s, dir, "lang", cur)
+              .select("lang", "n_docs", "n_chars").localCheckpoint()
           }
-        }
         val next =
-          (if (state.get == null) delta
-           else state.get.unionByName(delta).groupBy("lang")
+          (if (state == null) delta
+           else state.unionByName(delta).groupBy("lang")
              .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_chars")).as("n_chars")))
             .localCheckpoint()
-        state.set(next)
         // the txn-stamped commit (Delta's txn action): a batch REPLAYED
         // after a crash between this commit and the engine's commit-log
         // write becomes a no-op instead of a duplicate version —
@@ -906,29 +856,27 @@ object Streaming {
         // restart seeding is the PATTERN a durable deployment copies)
         val (v, committed) = Snapshots.commitIdempotentDetailed(s, dir,
           next, "lang", appId = s"stream_snapshot:$dir", batchId = batchId)
-        if (!committed)
+        if (committed) (next, v)
+        else
           // the commit NO-OPED: this batch was a replay whose rows the
           // seeded state already contained, so the in-memory fold above
           // double-counted it — RESYNC from the committed truth (the
           // invariant after every batch: state == table@latest). The
           // verdict comes from the commit call ITSELF, never from
-          // comparing v against lastV: a second writer landing between
-          // the restart seed and this no-op would shift the returned
-          // version and make the compare misread the replay as fresh.
-          state.set(Snapshots.read(s, dir, "lang", v)
-            .select("lang", "n_docs", "n_chars").localCheckpoint())
-        lastV.set(v)
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
-    (if (lastV.get == 0L)
+          // comparing v against the last version: a second writer
+          // landing between the restart seed and this no-op would shift
+          // the returned version and make the compare misread the
+          // replay as fresh.
+          (Snapshots.read(s, dir, "lang", v)
+            .select("lang", "n_docs", "n_chars").localCheckpoint(), v)
+    }
+    (if (lastV == 0L)
       docs.limit(0).groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
     else
-      Snapshots.read(s, dir, "lang", lastV.get)
+      Snapshots.read(s, dir, "lang", lastV)
         .select(col("lang"), col("n_docs"), col("n_chars")),
-      applied.get, dir)
+      applied, dir)
   }
 
   /** Streaming CONSUMER of the snapshot change feed — the loop-closer to
@@ -974,22 +922,14 @@ object Streaming {
     // compaction-as-version AFTER the fold: rewritten files carry their
     // dataVersion, so the feed below must not emit a single row for it
     Snapshots.optimize(s, dir, "part")
-    val feedAcc = new BatchAcc[DataFrame](null)
-    val batches = new BatchAcc(0)
-    val q = s.readStream.format("graft_snapshot_cdf")
-      .option("path", dir).option("partCol", "part")
-      .option("maxVersionsPerBatch", maxVersionsPerBatch.toString)
-      .load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
+    val (feed, batches) = foldBatches(s.readStream.format("graft_snapshot_cdf")
+        .option("path", dir).option("partCol", "part")
+        .option("maxVersionsPerBatch", maxVersionsPerBatch.toString)
+        .load(), null: DataFrame) {
+      (feed, b, _) =>
         val bb = b.localCheckpoint()
-        feedAcc.set(
-          if (feedAcc.get == null) bb else feedAcc.get.unionByName(bb))
-        batches.set(batches.get + 1)
-      }
-      .start()
-    drain(q)
-    val feed = feedAcc.get
+        if (feed == null) bb else feed.unionByName(bb)
+    }
     // the feed contract's fold: a changed partition's 'added' side is its
     // FULL new state, so final state = per partition, the added rows of
     // the last version that touched it (a partition whose last touch only
@@ -1002,7 +942,7 @@ object Streaming {
         col("part") === col("lt_part") &&
           col("_commit_version") === col("last_v"))
       .select("user_id", "event_id", "v")
-    (fin, batches.get, dir)
+    (fin, batches, dir)
   }
 
   def streamCdfRows(s: SparkSession, d: String): DataFrame =
@@ -1042,23 +982,15 @@ object Streaming {
     Snapshots.merge(s, dir, "part", "user_id", batch(1))
     Snapshots.merge(s, dir, "part", "user_id", batch(2))
     Snapshots.optimize(s, dir, "part")
-    val feedAcc = new BatchAcc[DataFrame](null)
-    val batches = new BatchAcc(0)
-    val q = s.readStream.format("graft_snapshot_cdf")
-      .option("path", dir).option("partCol", "part")
-      .option("rowLevel", "true").option("keyCol", "user_id")
-      .option("maxVersionsPerBatch", maxVersionsPerBatch.toString)
-      .load()
-      .writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
+    val (feed, batches) = foldBatches(s.readStream.format("graft_snapshot_cdf")
+        .option("path", dir).option("partCol", "part")
+        .option("rowLevel", "true").option("keyCol", "user_id")
+        .option("maxVersionsPerBatch", maxVersionsPerBatch.toString)
+        .load(), null: DataFrame) {
+      (feed, b, _) =>
         val bb = b.localCheckpoint()
-        feedAcc.set(
-          if (feedAcc.get == null) bb else feedAcc.get.unionByName(bb))
-        batches.set(batches.get + 1)
-      }
-      .start()
-    drain(q)
-    val feed = feedAcc.get
+        if (feed == null) bb else feed.unionByName(bb)
+    }
     // key-state fold: per key, the LATEST post-style image (insert /
     // update_postimage / delete) decides — delete drops the key, the
     // others carry the row. Pre-images are audit data, not state.
@@ -1070,7 +1002,7 @@ object Streaming {
       .filter(col("last.change") =!= "delete")
       .select(col("user_id"), col("last.event_id").as("event_id"),
         col("last.v").as("v"))
-    (fin, batches.get, dir)
+    (fin, batches, dir)
   }
 
   private[graft] def streamDriftEmbeddingCounted(s: SparkSession, d: String,
@@ -1092,26 +1024,17 @@ object Streaming {
     val ref = dims(emb).groupBy("i")
       .agg(decOut(sum(dec(col("x")))).as("rs"), count(lit(1)).as("rc"))
       .localCheckpoint()
-    val acc = new BatchAcc[DataFrame](null)
-    val applied = new BatchAcc(0)
-    val reader = s.readStream.schema(emb.schema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val q = reader.parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val (acc, applied) = foldBatches(
+        fileFeed(s, emb.schema, srcDir, glob, maxFilesPerTrigger), null: DataFrame) {
+      (acc, batch, _) =>
         val delta = sums(batch)
-        acc.set(
-          if (acc.get == null) delta.localCheckpoint()
-          else acc.get.unionByName(delta)
-            .groupBy("split", "i")
-            .agg(sum(col("cs")).as("cs"), sum(col("cc")).as("cc"))
-            .localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
-    val cur = if (acc.get == null) sums(emb.limit(0)) else acc.get
+        if (acc == null) delta.localCheckpoint()
+        else acc.unionByName(delta)
+          .groupBy("split", "i")
+          .agg(sum(col("cs")).as("cs"), sum(col("cc")).as("cc"))
+          .localCheckpoint()
+    }
+    val cur = if (acc == null) sums(emb.limit(0)) else acc
     (cur.join(broadcast(ref), Seq("i"))
       .withColumn("shift_u",
         floor(abs(col("rs") / col("rc") - decOut(col("cs")) / col("cc")) * 1000000))
@@ -1119,7 +1042,7 @@ object Streaming {
       .agg(sum(when(col("shift_u") > 100000, 1L).otherwise(0L)).as("n_dims_drifted"),
         max(col("shift_u")).as("max_shift_u"))
       .withColumn("drifted", col("n_dims_drifted") > 0),
-      applied.get)
+      applied)
   }
 
   /** Streaming cardinality monitor (the q_stream_cardinality body): a
@@ -1142,36 +1065,22 @@ object Streaming {
     import graft.Exact.h60
     import graft.operators.Sketches.{KmvK, KmvNum}
     import s.implicits._
-    val topic = FileBusFixture.ensureCardinalityTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
-    val sk = new BatchAcc[DataFrame](
-      Seq.empty[(String, Long)].toDF("event_type", "h"))
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(0).as("event_type"),
-        split(col("value"), ",").getItem(1).cast("long").as("user_id"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val (sk, applied) = foldBatches(cardinalityFeed(s, d, batches),
+        Seq.empty[(String, Long)].toDF("event_type", "h")) {
+      (sk, batch, _) =>
         val bh = batch.select(col("event_type"),
             h60(concat(lit("kmv:"), col("user_id"))).as("h"))
           .distinct()
-        sk.set(sk.get.unionByName(bh).distinct()
+        sk.unionByName(bh).distinct()
           .withColumn("rn", row_number().over(
             Window.partitionBy("event_type").orderBy("h")))
           .filter(col("rn") <= KmvK)
           .select("event_type", "h")
-          .localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
+          .localCheckpoint()
+    }
     // theta = the k-th smallest retained hash; types that never reached
     // k distinct keys report their sketch size (exact by construction)
-    val ranked = sk.get.withColumn("rn", row_number().over(
+    val ranked = sk.withColumn("rn", row_number().over(
       Window.partitionBy("event_type").orderBy("h")))
     val out = ranked.groupBy("event_type")
       .agg(count(lit(1)).as("n_sketch"),
@@ -1179,7 +1088,7 @@ object Streaming {
       .select(col("event_type"), col("n_sketch"),
         when(col("n_sketch") < KmvK, col("n_sketch"))
           .otherwise(expr(s"$KmvNum div th")).as("est"))
-    (out, applied.get)
+    (out, applied)
   }
 
   def streamCardinality(s: SparkSession, d: String): DataFrame =
@@ -1209,19 +1118,9 @@ object Streaming {
     import graft.Exact.h60
     import graft.operators.Sketches.{CmD, CmW}
     import s.implicits._
-    val topic = FileBusFixture.ensureCardinalityTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
-    val cells = new BatchAcc[DataFrame](
-      Seq.empty[(Int, Long, Long)].toDF("j", "b", "c"))
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(1).cast("long").as("user_id"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val (cells, applied) = foldBatches(cardinalityFeed(s, d, batches),
+        Seq.empty[(Int, Long, Long)].toDF("j", "b", "c")) {
+      (cells, batch, _) =>
         val bc = batch.groupBy("user_id").agg(count(lit(1)).as("cnt"))
           .select(col("cnt"),
             explode(sequence(lit(0), lit(CmD - 1))).as("j"), col("user_id"))
@@ -1230,13 +1129,10 @@ object Streaming {
               .as("b"),
             col("cnt"))
           .groupBy("j", "b").agg(sum("cnt").as("c"))
-        cells.set(cells.get.unionByName(bc)
+        cells.unionByName(bc)
           .groupBy("j", "b").agg(sum("c").as("c"))
-          .localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
+          .localCheckpoint()
+    }
     val cnts = graft.sources.Tables.events(s, d)
       .groupBy("user_id").agg(count(lit(1)).as("cnt"))
     val top = cnts.orderBy(col("cnt").desc, col("user_id").asc).limit(20)
@@ -1244,10 +1140,10 @@ object Streaming {
         explode(sequence(lit(0), lit(CmD - 1))).as("j"))
       .withColumn("b",
         h60(concat(lit("cm"), col("j"), lit(":"), col("user_id"))) % CmW)
-      .join(cells.get, Seq("j", "b"))
+      .join(cells, Seq("j", "b"))
       .groupBy("user_id", "cnt").agg(min("c").as("est"))
       .select("user_id", "cnt", "est")
-    (out, applied.get)
+    (out, applied)
   }
 
   def streamCountmin(s: SparkSession, d: String): DataFrame =
@@ -1282,34 +1178,21 @@ object Streaming {
   private[graft] def streamHeavyHittersCounted(s: SparkSession, d: String,
       batches: Int = 3, capacity: Int = 4): (DataFrame, Int) =
     withStatePartitions(s, 4) {
-    import org.apache.spark.sql.{Dataset, Encoders}
+    import org.apache.spark.sql.Encoders
     implicit val mapEnc = Encoders.kryo[Map[String, Long]]
-    val topic = FileBusFixture.ensureCardinalityTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
-    val sketch = new BatchAcc[Dataset[Map[String, Long]]](
-      s.createDataset(Seq(Map.empty[String, Long])))
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(1).cast("long").as("user_id"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val (sketch, applied) = foldBatches(cardinalityFeed(s, d, batches),
+        s.createDataset(Seq(Map.empty[String, Long]))) {
+      (sketch, batch, _) =>
         val bs = batch
           .select(col("user_id").bitwiseAND(-col("user_id"))
             .cast("string").as("k"))
           .as[String](Encoders.STRING)
           .select(new graft.functions.HeavyHitters(capacity).toColumn)
-        sketch.set(sketch.get.union(bs)
+        sketch.union(bs)
           .select(new graft.functions.HeavyHittersMerge(capacity).toColumn)
-          .localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
-    val sketchKeys = sketch.get.flatMap(_.keys)(Encoders.STRING).toDF("hh_k")
+          .localCheckpoint()
+    }
+    val sketchKeys = sketch.flatMap(_.keys)(Encoders.STRING).toDF("hh_k")
     val agged = graft.sources.Tables.events(s, d)
       .select(col("user_id").bitwiseAND(-col("user_id"))
         .cast("string").as("k"))
@@ -1320,7 +1203,7 @@ object Streaming {
       .select(col("k"), col("n"),
         (col("n") * (capacity + 1) <= col("total") || col("hh_k").isNotNull)
           .as("ok"))
-    (out, applied.get)
+    (out, applied)
   }
 
   def streamHeavyHitters(s: SparkSession, d: String): DataFrame =
@@ -1347,42 +1230,29 @@ object Streaming {
   private[graft] def streamQuantileCounted(s: SparkSession, d: String,
       batches: Int = 3): (DataFrame, Int) = withStatePartitions(s, 4) {
     import graft.operators.Sketches
-    val topic = FileBusFixture.ensureValueTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
-    val partials = new BatchAcc[DataFrame](null)
-    val applied = new BatchAcc(0)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(
-        (split(col("value"), ",").getItem(1).cast("long") % 4).as("grp"),
-        expr("CAST(round(CAST(split(value, ',')[2] AS DOUBLE) * 100) AS BIGINT)")
-          .as("cents"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val feed = busFeed(s, FileBusFixture.ensureValueTopic(s, d), batches,
+        "event_id" -> "long", "user_id" -> "long", "v" -> "double")
+      .select((col("user_id") % 4).as("grp"),
+        expr("CAST(round(v * 100) AS BIGINT)").as("cents"))
+    val (partials, applied) = foldBatches(feed, null: DataFrame) {
+      (partials, batch, _) =>
         val part = Sketches.quantileSketch(batch, "grp", "cents", levels = 5)
           .localCheckpoint()
-        partials.set(
-          if (partials.get == null) part else partials.get.unionByName(part))
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
+        if (partials == null) part else partials.unionByName(part)
+    }
     // Zero micro-batches (empty topic) leaves `partials` null — mirror
     // the minhash stream's guard and return an empty, correctly-typed
     // report instead of NPE-ing in the merge fold below.
-    if (partials.get == null) {
+    if (partials == null) {
       val empty = s.range(0).select(col("id").as("grp"),
         lit(0L).as("pct"), lit(0L).as("n"), lit(0L).as("exact_cents"),
         lit(true).as("ok")).limit(0)
-      (empty, applied.get)
+      (empty, applied)
     } else {
       val rounds =
-        if (applied.get <= 1) 0
-        else 32 - Integer.numberOfLeadingZeros(applied.get - 1)
-      val merged = (1 to rounds).foldLeft(partials.get)((df, _) =>
+        if (applied <= 1) 0
+        else 32 - Integer.numberOfLeadingZeros(applied - 1)
+      val merged = (1 to rounds).foldLeft(partials)((df, _) =>
         Sketches.quantileHalve(df))
       val band = (32L << rounds) * 4L
       val pcts = Seq(1, 50, 99)
@@ -1412,7 +1282,7 @@ object Streaming {
       val out = exact.join(broadcast(estBand), Seq("grp", "pct"))
         .select(col("grp"), col("pct"), col("n"), col("exact_cents"),
           (col("t") >= col("lo") - band && col("t") <= col("hi") + band).as("ok"))
-      (out, applied.get)
+      (out, applied)
     }
   }
 
@@ -1450,23 +1320,14 @@ object Streaming {
         "c_custkey", version = 1L)
       .select("c_custkey", "c_mktsegment", "valid_from", "valid_to")
       .localCheckpoint()
-    val acc = new BatchAcc[DataFrame](Seq.empty[(String, Long, Long)]
+    val zero = Seq.empty[(String, Long, Long)]
       .toDF("c_mktsegment", "epoch", "n_events")
       .withColumn("val_sum", lit(0).cast("decimal(38,10)"))
-      .filter(lit(false)))
-    val applied = new BatchAcc(0)
-    val topic = FileBusFixture.ensureValueTopic(s, d)
-    val total = FileBus.endOffsets(topic).values.sum
-    val cap = math.max(1L, total / batches + 1L)
-    val q = s.readStream.format(classOf[FileBusProvider].getName)
-      .option("path", topic)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(split(col("value"), ",").getItem(0).cast("long").as("event_id"),
-        split(col("value"), ",").getItem(1).cast("long").as("user_id"),
-        split(col("value"), ",").getItem(2).cast("double").as("v"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .filter(lit(false))
+    val (acc, applied) = foldBatches(
+        busFeed(s, FileBusFixture.ensureValueTopic(s, d), batches,
+          "event_id" -> "long", "user_id" -> "long", "v" -> "double"), zero) {
+      (acc, batch, _) =>
         val enriched = batch
           .select((col("event_id") % 2).as("epoch"),
             (col("user_id") % 1500 + 1).as("ck"), col("v").as("value"))
@@ -1476,17 +1337,14 @@ object Streaming {
               (col("valid_to").isNull || col("valid_to") > col("epoch")))
           .groupBy("c_mktsegment", "epoch")
           .agg(count(lit(1)).as("n_events"), sum(dec(col("value"))).as("val_sum"))
-        acc.set(acc.get.unionByName(enriched)
+        acc.unionByName(enriched)
           .groupBy("c_mktsegment", "epoch")
           .agg(sum("n_events").as("n_events"),
             sum("val_sum").cast("decimal(38,10)").as("val_sum"))
-          .localCheckpoint())
-        applied.set(applied.get + 1)
-      }
-      .start()
-    drain(q)
-    (acc.get.select(col("c_mktsegment"), col("epoch"), col("n_events"),
-      decOut(col("val_sum")).as("total_value")), applied.get)
+          .localCheckpoint()
+    }
+    (acc.select(col("c_mktsegment"), col("epoch"), col("n_events"),
+      decOut(col("val_sum")).as("total_value")), applied)
   }
 
   def streamDimLookup(s: SparkSession, d: String): DataFrame =
@@ -1520,24 +1378,18 @@ object Streaming {
     val corpusIdx = Graft.minhashBandKeys(
         Graft.shingleArrays(docs.filter(col("doc_id") % 3 === 0), "doc_id", "text"))
       .select("band", "bandkey").distinct().localCheckpoint()
-    val kept = new BatchAcc[DataFrame](null)
-    val q = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-      .filter(col("doc_id") % 3 =!= 0)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val (kept, _) = foldBatches(fileFeed(s, docs.schema, d, "documents.parquet")
+        .filter(col("doc_id") % 3 =!= 0), null: DataFrame) {
+      (kept, batch, _) =>
         val hit = Graft.minhashBandKeys(Graft.shingleArrays(batch, "doc_id", "text"))
           .join(corpusIdx, Seq("band", "bandkey"), "left_semi")
           .select("doc_id").distinct()
         val keep = batch.select("doc_id").join(hit, Seq("doc_id"), "left_anti")
           .localCheckpoint()
-        kept.set(
-          if (kept.get == null) keep else kept.get.union(keep).localCheckpoint())
-      }
-      .start()
-    drain(q)
-    if (kept.get == null) s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-    else kept.get
+        if (kept == null) keep else kept.union(keep).localCheckpoint()
+    }
+    if (kept == null) s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+    else kept
   }
 
   /** Model-based quality filtering AT INGEST — the streaming twin of
@@ -1559,27 +1411,18 @@ object Streaming {
     import graft.api.Graft
     val docs = graft.sources.Tables.documents(s, d)
     val w = Graft.qualityClassifierFit(docs.filter(col("doc_id") % 3 === 0))
-    val out = new BatchAcc[DataFrame](null)
-    val applied = new BatchAcc[Int](0)
-    val reader = s.readStream.schema(docs.schema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val q = reader.parquet(srcDir)
-      .filter(col("doc_id") % 3 =!= 0)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val (out, applied) = foldBatches(
+        fileFeed(s, docs.schema, srcDir, glob, maxFilesPerTrigger)
+          .filter(col("doc_id") % 3 =!= 0), null: DataFrame) {
+      (out, batch, _) =>
         val scored = Graft.qualityScore(batch, w).localCheckpoint()
-        applied.set(applied.get + 1)
-        out.set(
-          if (out.get == null) scored else out.get.union(scored).localCheckpoint())
-      }
-      .start()
-    drain(q)
-    (if (out.get == null)
+        if (out == null) scored else out.union(scored).localCheckpoint()
+    }
+    (if (out == null)
       s.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0).as("y_heur"),
         lit(0.0).as("score"), lit(false).as("flagged")).limit(0)
-    else out.get,
-      applied.get)
+    else out,
+      applied)
   }
 
   /** Ingest-time containment (quote/excerpt) filter — the streaming twin
@@ -1623,15 +1466,10 @@ object Streaming {
     val hot = corp.filter(col("df") > 64)
       .select(col("doc_id").as("j"), col("lang"), col("shingle"))
       .localCheckpoint()
-    val kept = new BatchAcc[DataFrame](null)
-    val applied = new BatchAcc[Int](0)
-    val reader = s.readStream.schema(docs.schema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val q = reader.parquet(srcDir)
-      .filter(col("doc_id") % 3 =!= 0)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val (kept, applied) = foldBatches(
+        fileFeed(s, docs.schema, srcDir, glob, maxFilesPerTrigger)
+          .filter(col("doc_id") % 3 =!= 0), null: DataFrame) {
+      (kept, batch, _) =>
         val sh = graft.operators.Dedup.shingleRows(batch).localCheckpoint()
         val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
         val interIdx = sh.join(idx, Seq("lang", "shingle"))
@@ -1648,15 +1486,11 @@ object Streaming {
           .select("doc_id").distinct()
         val keep = batch.select("doc_id")
           .join(drop, Seq("doc_id"), "left_anti").localCheckpoint()
-        applied.set(applied.get + 1)
-        kept.set(
-          if (kept.get == null) keep else kept.get.union(keep).localCheckpoint())
-      }
-      .start()
-    drain(q)
-    (if (kept.get == null) s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-     else kept.get,
-      applied.get)
+        if (kept == null) keep else kept.union(keep).localCheckpoint()
+    }
+    (if (kept == null) s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+     else kept,
+      applied)
   }
 
   /** Partitioned, offset-replayable ingestion: the [[FileBus]] topic at

@@ -169,19 +169,13 @@ class SnapshotDvSpec extends SparkSpec {
       seed(dir)
       Snapshots.delete(spark, dir, "part", col("k") === 7L)
       assert(dvRefs(dir, 2L).nonEmpty, "fixture must actually mask")
-      val got = java.util.Collections.synchronizedList(
-        new java.util.ArrayList[(Long, String, Long)]())
-      val q = spark.readStream.format("graft_snapshot_cdf")
-        .option("path", dir).option("partCol", "part").load()
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.select("_commit_version", "change", "k").collect()
-            .foreach(r => got.add((r.getLong(0), r.getString(1), r.getLong(2))))
-        }
-        .start()
-      graft.streaming.Streaming.drain(q)
-      import scala.jdk.CollectionConverters._
-      val rows = got.asScala.toList
+      val (rows, _) = graft.streaming.Streaming.foldBatches(
+          spark.readStream.format("graft_snapshot_cdf")
+            .option("path", dir).option("partCol", "part").load(),
+          List.empty[(Long, String, Long)]) { (got, b, _) =>
+        got ++ b.select("_commit_version", "change", "k").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      }
       // v1 snapshot: all 200; v2 step: p0's 100 removed + 99 added (7 masked)
       assert(rows.count(r => r._1 == 1L && r._2 == "added") == 200)
       assert(rows.count(r => r._1 == 2L && r._2 == "removed") == 100)
