@@ -252,45 +252,41 @@ class SnapshotCdfSource(spark: SparkSession, dir: String, partCol: String,
       s"graft_snapshot_cdf: version $v in batch ($a, $b] was retired by " +
         "vacuum — the retention window must exceed the consumer's lag " +
         "(re-seed the stream with a fresh startingVersion)")
-    // every version's scan is served under the STREAM's fixed schema in
-    // the STREAM's fixed column order (the engine grafts each batch into
-    // one plan: schemas must agree batch over batch); older files simply
-    // null-fill later-added columns. `streaming` is false on the
-    // row-level path: those steps hold a keyed full-outer JOIN, which
-    // must compile through the normal batch planner (a streaming-tagged
-    // pair would plan as a watermark-requiring stream-stream join) and
-    // is re-tagged once, at the end, via Bridge.streamingFrame.
-    def side(entries: Seq[Snapshots.Entry], label: String, v: Long,
-        ts: Option[Long]): DataFrame =
-      Snapshots.scanEntries(spark, partCol, dataSchema, entries,
-        streaming = rowKeyCol.isEmpty)
-        .select((dataSchema.fieldNames.toSeq ++ partSpec.names).map(col)
-          :+ lit(label).as("change")
-          :+ lit(v).as("_commit_version")
-          :+ ts.map(t => lit(t)).getOrElse(lit(null).cast("long"))
-            .as("_commit_timestamp"): _*)
+    // every version's files are served under the STREAM's fixed schema
+    // in the STREAM's fixed column order (the engine grafts each batch
+    // into one plan: schemas must agree batch over batch); older files
+    // simply null-fill later-added columns. The feed columns are per-file
+    // constants of the scan (Snapshots.scanStamped), so a batch of any
+    // number of versions is ONE scan, and no commit's version or
+    // timestamp becomes a literal in the generated code.
+    def stamp(label: Option[String], v: Long, ts: Option[Long]): Seq[String] =
+      label.toSeq ++ Seq(v.toString, ts.map(_.toString).orNull)
+    val feedCols = StructType(schema.fields.takeRight(3))
+    // the version's stamp without `change`: a row-level step derives it
+    val versionCols = StructType(feedCols.fields.drop(1))
     /** one row-level step: [[Snapshots.rowEvents]] over the two pinned
-      * states of version v's changed partitions, stamped with v */
+      * states of version v's changed partitions, both stamped with v (so
+      * every image carries it). `streaming` is false here: the step
+      * holds a keyed full-outer JOIN, which must compile through the
+      * normal batch planner (a streaming-tagged pair would plan as a
+      * watermark-requiring stream-stream join) and is re-tagged once, at
+      * the end, via Bridge.streamingFrame. */
     def rowStep(removed: Seq[Snapshots.Entry], added: Seq[Snapshots.Entry],
         v: Long, ts: Option[Long]): DataFrame = {
       def st(entries: Seq[Snapshots.Entry]) =
-        Snapshots.scanEntries(spark, partCol, dataSchema, entries)
-          .select((dataSchema.fieldNames.toSeq ++ partSpec.names)
-            .map(col): _*)
+        Snapshots.scanStamped(spark, partCol, dataSchema,
+          Seq(entries -> stamp(None, v, ts)), versionCols, streaming = false)
       Snapshots.rowEvents(st(removed), st(added), rowKeyCol.get)
-        .select((dataSchema.fieldNames.toSeq ++ partSpec.names).map(col)
-          :+ col("change")
-          :+ lit(v).as("_commit_version")
-          :+ ts.map(t => lit(t)).getOrElse(lit(null).cast("long"))
-            .as("_commit_timestamp"): _*)
+        .select(schema.fieldNames.toSeq.map(col): _*)
     }
     // one manifest read per version in the range: step v's to-manifest
-    // is step v+1's from-manifest
+    // is step v+1's from-manifest. Each version yields its removed and
+    // added entries.
     var prevM: Option[(Long, Snapshots.Manifest)] = None
-    val steps = (a + 1 to b).flatMap { v =>
+    val steps = (a + 1 to b).map { v =>
       if (!live.contains(v)) gone(v)
       val mT = Snapshots.readManifest(spark, dir, v)
-      val out =
+      val (removed, added) =
         if (start.isEmpty && v == a + 1 && initialSnapshotAt.contains(v)) {
           // the query's very FIRST batch may open with the configured
           // initial snapshot. `base`/`initialSnapshotAt` are PINNED in
@@ -307,33 +303,35 @@ class SnapshotCdfSource(spark: SparkSession, dir: String, partCol: String,
           // re-deliver the whole table as 'added'.
           // initial full snapshot: 'added' at partition grain, 'insert'
           // row images at row grain (Delta's initial-load convention)
-          if (rowKeyCol.isDefined) Seq(rowStep(Nil, mT.entries, v, mT.ts))
-          else Seq(side(mT.entries, "added", v, mT.ts))
+          (Nil, mT.entries)
         } else {
           if (!live.contains(v - 1)) gone(v - 1)
           val mF = prevM.collect { case (pv, m) if pv == v - 1 => m }
             .getOrElse(Snapshots.readManifest(spark, dir, v - 1))
-          val (removed, added) = Snapshots.changedSets(mF, mT, v - 1)
-          if (rowKeyCol.isDefined) Seq(rowStep(removed, added, v, mT.ts))
-          else Seq(side(removed, "removed", v, mT.ts),
-            side(added, "added", v, mT.ts))
+          Snapshots.changedSets(mF, mT, v - 1)
         }
       prevM = Some((v, mT))
-      out
+      (v, mT.ts, removed, added)
     }
-    if (steps.isEmpty) {
-      val empty = side(Nil, "added", b, None).limit(0)
-      if (rowKeyCol.isDefined)
-        org.apache.spark.sql.graftbridge.Bridge.streamingFrame(spark, empty)
-      else empty
-    }
-    else if (rowKeyCol.isDefined)
+    if (rowKeyCol.isEmpty)
+      // the partition grain: every version's sides in ONE scan
+      Snapshots.scanStamped(spark, partCol, dataSchema,
+        steps.flatMap { case (v, ts, removed, added) =>
+          Seq(removed -> stamp(Some("removed"), v, ts),
+            added -> stamp(Some("added"), v, ts))
+        }.filter(_._1.nonEmpty), feedCols, streaming = true)
+    else {
+      val rows = steps.map { case (v, ts, removed, added) =>
+        rowStep(removed, added, v, ts) }
       // per-version row steps union batch-side, then ONE streaming
       // re-tag — the engine sees a single streaming batch whose inner
-      // plan compiled through the normal planner (see `side`'s note)
+      // plan compiled through the normal planner (see rowStep's note)
       org.apache.spark.sql.graftbridge.Bridge.streamingFrame(spark,
-        steps.reduce(_ unionByName _))
-    else steps.reduce(_ unionByName _)
+        if (rows.isEmpty)
+          Snapshots.scanStamped(spark, partCol, dataSchema, Nil, feedCols,
+            streaming = false)
+        else rows.reduce(_ unionByName _))
+    }
   }
 
   override def commit(end: V1Offset): Unit = () // retention is vacuum's job

@@ -1430,30 +1430,52 @@ object Snapshots {
     * `partCol`, per-file skipping on the recorded column bounds */
   private[graft] def scanEntries(s: SparkSession, partCol: String,
       schema: StructType, entries: Seq[Entry],
-      streaming: Boolean = false): DataFrame = {
-    // the RELATION always reads the files' PHYSICAL schema (manifest
-    // stats are keyed physical too, so pushed filters and per-file
-    // bounds agree under the scan); a rename-bearing header then aliases
-    // physical -> logical ON TOP — Catalyst pushes predicates and
-    // pruning straight through the aliases, so the plan below the
-    // projection is identical to the unmapped case. Trivially-mapped
-    // tables (the common case) skip the projection entirely.
-    val spec = PartSpec.parse(partCol)
-    val phys = ColumnMapping.physicalStruct(schema)
-    val types = phys.fields.map(f => f.name -> f.dataType).toMap
-    val raw =
-      if (streaming)
-        Bridge.manifestStreamScan(s, spec.struct,
-          indexFiles(spec, phys, entries), types, phys)
-      else
-        Bridge.manifestFileScan(s, spec.struct,
-          indexFiles(spec, phys, entries), types, phys)
-    val scan = applyDv(s, raw, entries)
-    if (!ColumnMapping.nontrivial(schema)) scan
-    else scan.select(schema.fields.toSeq.map(f =>
-      col(ColumnMapping.physicalName(f)).as(f.name)) ++
-      spec.names.map(col): _*)
-  }
+      streaming: Boolean = false): DataFrame =
+    scanStamped(s, partCol, schema, Seq(entries -> Nil), new StructType,
+      streaming)
+
+  /** [[scanEntries]] over several groups of entries in ONE scan, each
+    * group's rows stamped with its own `stamp` values (external string
+    * form, null allowed) as the extra columns `stamps` — per-file
+    * constants the index serves like partition values, after the
+    * partition column(s). That is how the change feed labels a batch's
+    * rows ('added'/'removed', commit version, commit timestamp) without
+    * a projection of literals per version: no per-version plan and no
+    * per-commit constant in the generated code. A file may sit in
+    * several groups (added at one version, removed at a later one).
+    * Deletion vectors mask by file path, so when any entry carries one,
+    * the groups are scanned one by one and unioned instead (a file's
+    * older entry must not take its newer mask). */
+  private[graft] def scanStamped(s: SparkSession, partCol: String,
+      schema: StructType, groups: Seq[(Seq[Entry], Seq[String])],
+      stamps: StructType, streaming: Boolean): DataFrame =
+    if (groups.size > 1 && groups.exists(_._1.exists(_.dv.isDefined)))
+      groups.map(g => scanStamped(s, partCol, schema, Seq(g), stamps, streaming))
+        .reduce(_ unionByName _)
+    else {
+      // the RELATION always reads the files' PHYSICAL schema (manifest
+      // stats are keyed physical too, so pushed filters and per-file
+      // bounds agree under the scan); a rename-bearing header then
+      // aliases physical -> logical ON TOP — Catalyst pushes predicates
+      // and pruning straight through the aliases, so the plan below the
+      // projection is identical to the unmapped case. Trivially-mapped
+      // tables (the common case) skip the projection entirely.
+      val spec = PartSpec.parse(partCol)
+      val phys = ColumnMapping.physicalStruct(schema)
+      val types = phys.fields.map(f => f.name -> f.dataType).toMap
+      val files = groups.flatMap { case (entries, stamp) =>
+        indexFiles(spec, phys, entries).map(f => f.copy(values = f.values ++ stamp))
+      }
+      val partSchema = StructType(spec.struct.fields ++ stamps.fields)
+      val raw =
+        if (streaming) Bridge.manifestStreamScan(s, partSchema, files, types, phys)
+        else Bridge.manifestFileScan(s, partSchema, files, types, phys)
+      val scan = applyDv(s, raw, groups.flatMap(_._1))
+      if (!ColumnMapping.nontrivial(schema)) scan
+      else scan.select(schema.fields.toSeq.map(f =>
+        col(ColumnMapping.physicalName(f)).as(f.name)) ++
+        (spec.names ++ stamps.fieldNames).map(col): _*)
+    }
 
   /** Apply the entries' DELETION VECTORS (if any) above the scan: a
     * broadcast LEFT ANTI join of the scan's hidden parquet position
@@ -2301,11 +2323,11 @@ object Snapshots {
     * 'D' delete), with `partCol` carrying each key's partition.
     *
     * The rewrite set is chosen from METADATA ALONE: the delta's per-
-    * partition [min, max] key span (one tiny aggregate of the delta)
-    * intersected with each file's recorded bounds — a conservative
-    * superset (a file overlapping the span but holding none of the keys
-    * is still rewritten), with files lacking `keyCol` bounds always
-    * included. On a key-clustered table ([[optimize]] with
+    * partition [min, max] key span (folded by the one pass that
+    * materializes the delta) intersected with each file's recorded
+    * bounds — a conservative superset (a file overlapping the span but
+    * holding none of the keys is still rewritten), with files lacking
+    * `keyCol` bounds always included. On a key-clustered table ([[optimize]] with
     * clusterBy = keyCol, statsColumns = keyCol) and a localized delta,
     * that is the 1%-of-rows => ~1%-of-files rewrite; every untouched
     * file — INCLUDING untouched files of touched partitions — is carried
@@ -2333,19 +2355,35 @@ object Snapshots {
       delta: DataFrame, statsColumns: Seq[String] = null,
       attempts: Int = 5): Long = {
     require(attempts >= 1, "merge needs at least one attempt")
+    // the keyed delta is evaluated ONCE (on the first attempt, after its
+    // columns are checked) and every OCC re-plan reuses it: the rewrite
+    // set's key spans and the written rows come from one evaluation,
+    // even for a nondeterministic delta, and the write does not
+    // evaluate it again. Its blocks are dropped when the merge ends.
+    var pinned: Bridge.Pinned = null
+    def keyed: Bridge.Pinned = {
+      if (pinned == null) pinned = Bridge.checkpointSpans(
+        delta.withColumn("__part_value", PartSpec.parse(partCol).valueExpr),
+        "__part_value", keyCol)
+      pinned
+    }
     var last: Throwable = null
     var i = 0
-    while (i < attempts) {
-      try return mergeOnce(s, dir, partCol, keyCol, delta, statsColumns)
-      catch { case e: Throwable if isCommitRace(e, dir) => last = e; i += 1 }
-    }
+    try {
+      while (i < attempts) {
+        try return mergeOnce(s, dir, partCol, keyCol, delta.columns.toSeq,
+          keyed, statsColumns)
+        catch { case e: Throwable if isCommitRace(e, dir) => last = e; i += 1 }
+      }
+    } finally if (pinned != null) pinned.release()
     throw new IllegalStateException(
       s"Snapshots: merge lost $attempts consecutive optimistic races at " +
         s"$dir — a hotter writer is live; back off or coordinate", last)
   }
 
   private def mergeOnce(s: SparkSession, dir: String, partCol: String,
-      keyCol: String, delta: DataFrame, statsColumns: Seq[String]): Long = {
+      keyCol: String, deltaCols: Seq[String],
+      keyed: => Bridge.Pinned, statsColumns: Seq[String]): Long = {
     val cur = currentVersion(s, dir)
     require(cur >= 1,
       s"Snapshots: merge needs a committed table at $dir — seed with commit()")
@@ -2355,51 +2393,44 @@ object Snapshots {
       s"Snapshots: merge key '$keyCol' is not a table column")
     val spec = PartSpec.parse(partCol)
     val tableCols = schema.fieldNames.toSeq ++ spec.names
-    val missing = (tableCols :+ "op").filterNot(delta.columns.contains)
+    val missing = (tableCols :+ "op").filterNot(deltaCols.contains)
     require(missing.isEmpty,
       s"Snapshots: delta is missing columns ${missing.mkString(", ")} " +
         "(the table's columns + the partition column(s) + op)")
     val keyType = schema(keyCol).dataType
-    // the delta's per-partition key span — ONE tiny aggregate, the only
-    // look at the delta before the rewrite itself. It also carries the
-    // NULL-key census: a NULL-keyed 'U' row would slide through the
-    // full-outer join matching nothing and land as a FRESH insert on
-    // every merge (and on every OCC re-plan) — the silent key-uniqueness
-    // corruption the loud refusal here prevents, at zero extra passes.
-    val spanRows = delta.groupBy(spec.valueExpr.as("__part_value"))
-      .agg(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi"),
-        count(lit(1)).as("n"), count(col(keyCol)).as("nk"))
-      .collect()
-    val nullKeyed = spanRows.map(r => r.getLong(3) - r.getLong(4)).sum
+    // the delta's per-partition key spans, from the materializing pass.
+    // They also carry the NULL-key census: a NULL-keyed 'U' row would
+    // slide through the full-outer join matching nothing and land as a
+    // FRESH insert on every merge (and on every OCC re-plan) — the
+    // silent key-uniqueness corruption the loud refusal here prevents.
+    val spans = keyed.spans
+    val nullKeyed = spans.values.map(sp => sp.rows - sp.keyed).sum
     require(nullKeyed == 0,
       s"Snapshots: merge delta holds $nullKeyed NULL-keyed row(s) — a NULL " +
         s"'$keyCol' can never match a base row (every merge would re-insert " +
         "it); filter or impute NULL keys before merging")
-    val spans = spanRows
-      .map(r => r.getString(0) -> (r.get(1), r.get(2))).toMap
     val ord = org.apache.spark.sql.catalyst.util.TypeUtils
       .getInterpretedOrdering(keyType)
-    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(keyType)
     // recorded cells are keyed PHYSICAL (identity unless renamed)
     val keyPhys = ColumnMapping.physicalName(schema(keyCol))
     def affected(e: Entry): Boolean = spans.get(e.value) match {
       case None => false // no delta rows target this partition
-      case Some((dlo, dhi)) =>
-        if (dlo == null) false // every key in the span is NULL: matches nothing
+      case Some(span) =>
+        if (span.lo == null) false // every key in the span is NULL: matches nothing
         else e.stats.get(keyPhys) match {
           case Some((loS, hiS)) if StatCodec.supported(keyType) =>
             try {
               val lo = StatCodec.internal(keyType, loS)
               val hi = StatCodec.internal(keyType, hiS)
-              // overlap test: file [lo,hi] x delta span [dlo,dhi]
-              !(ord.lt(toInternal(dhi), lo) || ord.gt(toInternal(dlo), hi))
+              // overlap test: file [lo,hi] x delta span [span.lo,span.hi]
+              !(ord.lt(span.hi, lo) || ord.gt(span.lo, hi))
             } catch { case _: Exception => true }
           case _ => true // no recorded bounds: conservatively rewritten
         }
     }
     val (rewrite, carried) = m.entries.partition(affected)
     val base = scanEntries(s, partCol, schema, rewrite)
+    val delta = keyed.rows(otherBytes = rewrite.map(_.bytes).sum)
     val merged = graft.api.Graft
       .merge(base, delta.select(("op" +: tableCols).map(col): _*), keyCol)
       .drop("op")

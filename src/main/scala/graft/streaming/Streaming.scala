@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 import graft.QueryDef
 
@@ -19,9 +20,10 @@ import graft.QueryDef
   * Every bounded-replay stream runs through one of two helpers, and
   * through nothing else: [[toMemory]] (a memory sink whose rows come
   * back as a DataFrame) and [[foldBatches]] (a `foreachBatch` fold over
-  * the micro-batches). Both start the query, wait for it through
-  * [[drain]] and stop it; neither leaves an active query or a session
-  * view behind, on success or on failure.
+  * the micro-batches). Both start the query (through [[start]], so a
+  * rerun reuses its generated code), wait for it through [[drain]] and
+  * stop it; neither leaves an active query or a session view behind,
+  * on success or on failure.
   */
 object Streaming {
 
@@ -30,8 +32,7 @@ object Streaming {
   /** Drain a bounded-replay stream with a hard timeout: a wedged
     * micro-batch must fail ONE query, not hang the whole Verify run (the
     * driver's correctness gate dumps nothing if the JVM never exits). */
-  def drain(q: org.apache.spark.sql.streaming.StreamingQuery,
-      timeoutMs: Long = DrainTimeoutMs): Unit =
+  def drain(q: StreamingQuery, timeoutMs: Long = DrainTimeoutMs): Unit =
     try {
       val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
       val t = new Thread(() => try q.processAllAvailable()
@@ -46,6 +47,32 @@ object Streaming {
       if (failure.get() != null) throw failure.get()
     } finally q.stop()
 
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** Start `w`'s query so that its tasks share the executor's class
+    * loader. A stream query runs in a clone of `s` with a fresh session
+    * id; under artifact isolation (Spark's default) its tasks then get a
+    * class loader of their own, and since Spark's codegen cache is keyed
+    * by (loader, code), every run of the same query compiled all its
+    * generated classes again. The clone copies the conf inside
+    * `start()`, so isolation is off exactly there; the caller's conf is
+    * restored before this returns. Starts are serialized, so two
+    * starts' save and restore cannot interleave. Anything else that
+    * runs on `s` during a start (another thread's query, or a conf set
+    * it makes) sees isolation off, or has its setting of it overwritten
+    * by the restore: a session is assumed to be driven by one thread at
+    * a time while a stream starts. */
+  private def start(s: SparkSession, w: DataStreamWriter[_]): StreamingQuery =
+    synchronized {
+      val saved = s.conf.getOption(ArtifactIsolation)
+      s.conf.set(ArtifactIsolation, "false")
+      try w.start()
+      finally saved match {
+        case Some(v) => s.conf.set(ArtifactIsolation, v)
+        case None => s.conf.unset(ArtifactIsolation)
+      }
+    }
+
   /** Run `ds` into a memory sink until it has consumed everything
     * available and return the sink's rows. The sink's session view is
     * dropped before this returns, also when the stream fails: the
@@ -58,8 +85,8 @@ object Streaming {
   private[graft] def toMemoryCounted(ds: Dataset[_],
       outputMode: String): (DataFrame, Int) = {
     val name = "stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = ds.writeStream.outputMode(outputMode).format("memory")
-      .queryName(name).start()
+    val q = start(ds.sparkSession,
+      ds.writeStream.outputMode(outputMode).format("memory").queryName(name))
     try {
       drain(q)
       (ds.sparkSession.table(name), q.recentProgress.count(_.numInputRows > 0))
@@ -77,12 +104,11 @@ object Streaming {
     // itself, not by the engine's incidental happens-before at query
     // termination (batches run one at a time, so no CAS is needed)
     val acc = new java.util.concurrent.atomic.AtomicReference((zero, 0))
-    val q = df.writeStream
+    val q = start(df.sparkSession, df.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val (a, n) = acc.get
         acc.set((step(a, batch, batchId), n + 1))
-      }
-      .start()
+      })
     drain(q, timeoutMs)
     acc.get
   }

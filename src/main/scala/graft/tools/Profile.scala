@@ -1,5 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Dev tool: time ONE registered query repeatedly (same session config as
   * graft.Bench) and optionally dump its formatted plan — the feedback loop
   * for "is this the plan I'd want at 100 TB", per query instead of per
@@ -11,7 +14,10 @@ package graft.tools
   * Several queries (or `all`, the whole registry) run one after another
   * in the same session, each for `reps` reps; a failing rep prints
   * `failed` and the run goes on (scripts/fork_count.sh sweeps the
-  * registry this way). After a query's reps, a `drift` line gives the
+  * registry this way). Each rep line also gives the generated classes
+  * compiled during the rep and their compile ms (Spark's codegen
+  * metrics): a warm rep whose plans are all in the codegen cache
+  * compiles 0. After a query's reps, a `drift` line gives the
   * least-squares slope of rep time over rep number as a fraction of
   * the median rep (perfbench's pass drift): a clearly negative drift
   * means the reps are still warming up, and their median is not yet an
@@ -27,6 +33,10 @@ object Profile {
       secs.indices.map(i => (i - mx) * (i - mx)).sum
     slope / median(secs)
   }
+
+  /** generated classes compiled so far in this JVM (driver and local
+    * tasks alike) */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -55,12 +65,14 @@ object Profile {
     for (name <- names) {
       if (doExplain) graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
       val secs = (1 to reps).flatMap { r =>
+        val (c0, ns0) = (compiles, CodeGenerator.compileTime)
         val t0 = System.nanoTime()
         try {
           graft.SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           val s = (System.nanoTime() - t0) / 1e9
-          println(f"[profile] $name rep $r: $s%.2f s")
+          val ms = (CodeGenerator.compileTime - ns0) / 1e6
+          println(f"[profile] $name rep $r: $s%.2f s, ${compiles - c0} compiles, $ms%.0f compile ms")
           Some(s)
         } catch {
           case e: Exception if names.size > 1 =>

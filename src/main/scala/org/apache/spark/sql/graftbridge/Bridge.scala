@@ -1,11 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.{CoalescedHashPartitioning,
+  Partitioning, PartitioningCollection}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Column <-> Expression bridge. Spark 4 made the converters
@@ -66,6 +72,93 @@ object Bridge {
           LogicalRDD(output, rdd, part, ord, streaming, stream)(
             ds.sparkSession, Some(clamped), None))
       case _ => df
+    }
+  }
+
+  /** One group's key span: the least and greatest non-null `key`
+    * (Catalyst internal values, null while the group has no non-null
+    * key), the group's rows and its rows with a non-null key. */
+  final case class KeySpan(lo: Any, hi: Any, rows: Long, keyed: Long)
+
+  /** A frame local-checkpointed by [[checkpointSpans]], with the key
+    * spans its materializing job folded. */
+  final class Pinned private[graftbridge] (lr: LogicalRDD,
+      s: org.apache.spark.sql.classic.SparkSession,
+      val spans: Map[String, KeySpan]) {
+
+    /** The checkpointed rows. They keep the partitioning and ordering
+      * of the plan that made them, so a join on the key does not shuffle
+      * them again. Hash buckets that the plan coalesced into ONE
+      * partition are declared hashed into one, which a join can match,
+      * only when the join's other side (`otherBytes`, its files' bytes)
+      * fits one advisory partition too: that side is then shuffled into
+      * the one partition, and a larger side would make the join one
+      * task. Otherwise the coalesced layout stays, and the join shuffles
+      * both sides as it would for a frame that was never checkpointed. */
+    def rows(otherBytes: Long): DataFrame = {
+      val part = lr.outputPartitioning match {
+        case CoalescedHashPartitioning(h, Seq(_)) if otherBytes <=
+            s.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) =>
+          h.copy(numPartitions = 1)
+        case p => p
+      }
+      Dataset.ofRows(s, lr.copy(outputPartitioning = part)(s,
+        Some(lr.computeStats()), Some(lr.constraints)))
+    }
+
+    /** Drop the checkpoint's blocks; the rows are unreadable after. */
+    def release(): Unit = lr.rdd.unpersist(blocking = false)
+  }
+
+  /** Local-checkpoint `df` in ONE job that also returns, per value of
+    * its string column `group`, the [[KeySpan]] of its column `key`.
+    * The rows and the spans come from the same evaluation, which a
+    * second look at `df` cannot promise when `df` is nondeterministic
+    * (and which would cost a second evaluation besides). */
+  def checkpointSpans(df: DataFrame, group: String, key: String): Pinned = {
+    val ds = df.asInstanceOf[Dataset[Row]]
+    val qe = ds.queryExecution
+    val (gi, ki) = (df.schema.fieldIndex(group), df.schema.fieldIndex(key))
+    val keyType = df.schema(key).dataType
+    def widen(ord: Ordering[Any], a: KeySpan, b: KeySpan): KeySpan = KeySpan(
+      if (a.lo == null || (b.lo != null && ord.lt(b.lo, a.lo))) b.lo else a.lo,
+      if (a.hi == null || (b.hi != null && ord.gt(b.hi, a.hi))) b.hi else a.hi,
+      a.rows + b.rows, a.keyed + b.keyed)
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      // the job's tasks fill the checkpoint's blocks as they fold
+      val perTask = ds.sparkSession.sparkContext.runJob(rdd,
+        (rows: Iterator[InternalRow]) => {
+          val ord = TypeUtils.getInterpretedOrdering(keyType)
+          val acc = scala.collection.mutable.HashMap.empty[String, KeySpan]
+          rows.foreach { r =>
+            val g = if (r.isNullAt(gi)) null else r.getUTF8String(gi).toString
+            val k = if (r.isNullAt(ki)) null else r.get(ki, keyType)
+            val one = KeySpan(k, k, 1L, if (k == null) 0L else 1L)
+            acc(g) = acc.get(g).fold(one)(widen(ord, _, one))
+          }
+          acc.toMap
+        })
+      // an adaptive plan knows its final partitioning and ordering only
+      // once it has run, and Spark's own localCheckpoint then keeps
+      // neither; like it, keep the first of a collection's layouts
+      val ran = qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      def firstLeaf(p: Partitioning): Partitioning = p match {
+        case c: PartitioningCollection => firstLeaf(c.partitionings.head)
+        case p => p
+      }
+      val lr = LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)
+      val ord = TypeUtils.getInterpretedOrdering(keyType)
+      new Pinned(
+        lr.copy(outputPartitioning = firstLeaf(ran.outputPartitioning),
+          outputOrdering = ran.outputOrdering)(ds.sparkSession,
+          Some(lr.computeStats()), Some(lr.constraints)),
+        ds.sparkSession,
+        perTask.flatten.groupMapReduce(_._1)(_._2)(widen(ord, _, _)))
     }
   }
 

@@ -76,7 +76,7 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("writeArtifact: refused candidates persist to .rejected; a promoted write clears it") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_art_").toString
+    val dir = SparkSpec.tempDir("bench_art_")
     val path = s"$dir/bench_full.json"
     def read(p: String) = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))).trim
@@ -123,7 +123,7 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("an existing-but-unreadable artifact refuses promotion (unreadable != absent)") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_art_").toString
+    val dir = SparkSpec.tempDir("bench_art_")
     val path = s"$dir/bench_full.json"
     // a directory at the artifact path makes the read throw, not 'absent'
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(path))

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class FileBusCompactionSpec extends SparkSpec {
 
   private def mkTopic(parts: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("filebus_compact_").toString
+    val dir = tempDir("filebus_compact_")
     FileBus.createTopic(dir, parts)
     dir
   }

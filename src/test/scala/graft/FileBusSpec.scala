@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.read.streaming.ReadLimit
 class FileBusSpec extends SparkSpec {
 
   private def mkTopic(parts: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("filebus_").toString
+    val dir = tempDir("filebus_")
     FileBus.createTopic(dir, parts)
     dir
   }
@@ -220,7 +220,7 @@ class FileBusSpec extends SparkSpec {
 
   test("Trigger.AvailableNow drains the start-time snapshot in rate-limited batches, then terminates") {
     val dir = mkTopic(2)
-    val ckpt = java.nio.file.Files.createTempDirectory("filebus_an_").toString
+    val ckpt = tempDir("filebus_an_")
     val lines = (0 until 12).map(i =>
       rec(if (i % 2 == 0) H0 else H1, i, if (i % 4 == 0) "purchase" else "click", i * 1.5))
     FileBus.append(dir, 0, lines.take(6))
@@ -247,7 +247,7 @@ class FileBusSpec extends SparkSpec {
 
   test("AvailableNow killed mid-ladder restarts exactly-once, with appends racing the drain") {
     val dir = mkTopic(2)
-    val ckpt = java.nio.file.Files.createTempDirectory("filebus_ankill_").toString
+    val ckpt = tempDir("filebus_ankill_")
     val lines = (0 until 12).map(i =>
       rec(if (i % 2 == 0) H0 else H1, i, if (i % 4 == 0) "purchase" else "click", i * 1.5))
     FileBus.append(dir, 0, lines.take(6))
@@ -340,7 +340,7 @@ class FileBusSpec extends SparkSpec {
   test("sink: streaming write is exactly-once across checkpointed restart; replayed epoch commit is a no-op") {
     val a = mkTopic(2)
     val b = mkTopic(2)
-    val ckpt = java.nio.file.Files.createTempDirectory("filebus_sink_").toString
+    val ckpt = tempDir("filebus_sink_")
     FileBus.append(a, 0, Seq("a0", "a1"))
     FileBus.append(a, 1, Seq("a2"))
     def pump(): Unit = {
@@ -367,7 +367,7 @@ class FileBusSpec extends SparkSpec {
     // Spark's contract: commit(epochId) may be REPLAYED after recovery —
     // the epoch marker must make the second commit a whole-epoch no-op
     val w = new FileBusStreamingWrite(b, "qtest", "wtest", 0, 1)
-    val stagedFile = java.nio.file.Files.createTempFile("staged_", ".log")
+    val stagedFile = java.nio.file.Paths.get(tempDir("staged_"), "staged.log")
     java.nio.file.Files.writeString(stagedFile, "x0\nx1\n")
     val msgs: Array[org.apache.spark.sql.connector.write.WriterCommitMessage] =
       Array(FileBusStaged(0, stagedFile.toString, 0L, 2L))
@@ -381,7 +381,7 @@ class FileBusSpec extends SparkSpec {
 
   test("checkpointed restart resumes from committed offsets: exactly-once totals, delta-only reads") {
     val dir = mkTopic(2)
-    val ckpt = java.nio.file.Files.createTempDirectory("filebus_ckpt_").toString
+    val ckpt = tempDir("filebus_ckpt_")
     val first = Seq(rec(H0, 0, "click", 1.0), rec(H0, 1, "click", 2.0),
       rec(H1, 0, "purchase", 3.0))
     FileBus.append(dir, 0, first.take(2))
@@ -417,7 +417,7 @@ class FileBusSpec extends SparkSpec {
 
   test("a current fixture topic is checked with no Spark job; a rewritten events file rebuilds it") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val d = Files.createTempDirectory("graft_busfix_")
+    val d = Paths.get(tempDir("graft_busfix_"))
     Files.copy(Paths.get(s"$sf/events.parquet"), d.resolve("events.parquet"))
     val topic = graft.streaming.FileBusFixture.ensureTopic(spark, d.toString)
     def logs(): Seq[String] = (0 until graft.streaming.FileBusFixture.Partitions)

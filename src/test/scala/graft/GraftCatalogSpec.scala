@@ -11,8 +11,7 @@ class GraftCatalogSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val wh = {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_catalog_spec").toString
+    val d = tempDir("graft_catalog_spec")
     spark.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft.warehouse", d)
@@ -218,8 +217,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("writeStream.toTable lands exactly-once epoch commits by name") {
     val dir = seed("db8", "t8")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_totable_ckpt").toString
+    val ckpt = tempDir("graft_totable_ckpt")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Long, Long)]
@@ -276,8 +274,7 @@ class GraftCatalogSpec extends SparkSpec {
     // a tab-bearing partition value refuses at the epoch commit (the
     // line-oriented manifest cannot carry it) — the query fails loudly
     // instead of landing a torn manifest
-    val ckpt2 = java.nio.file.Files
-      .createTempDirectory("graft_totable_ckpt2").toString
+    val ckpt2 = tempDir("graft_totable_ckpt2")
     val mem2 = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Long, Long)]
     mem2.addData(("a\tb", 1L, 1L))

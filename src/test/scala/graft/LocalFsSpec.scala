@@ -18,11 +18,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 class LocalFsSpec extends SparkSpec {
   private val LocalUri = URI.create("file:///")
 
-  private def tmpDir(name: String): java.nio.file.Path = {
-    val d = Files.createTempDirectory(s"graft_$name")
-    d.toFile.deleteOnExit()
-    d
-  }
+  private def tmpDir(name: String): java.nio.file.Path =
+    java.nio.file.Paths.get(tempDir(s"graft_$name"))
 
   /** a stock raw local FS and the engine's, side by side */
   private def pair(): (RawLocalFileSystem, RawLocalFileSystem) = {

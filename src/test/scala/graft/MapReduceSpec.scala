@@ -38,7 +38,7 @@ class MapReduceSpec extends SparkSpec {
   }
 
   test("AppRegistry runs wordcount over a text directory (reference job path)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wc").toFile
+    val dir = new java.io.File(tempDir("graft_wc"))
     java.nio.file.Files.writeString(new java.io.File(dir, "f1.txt").toPath, "a b a\nb c\n")
     java.nio.file.Files.writeString(new java.io.File(dir, "f2.txt").toPath, "c c\n")
     val got = AppRegistry.runJob(spark, "wordcount", dir.getAbsolutePath).collect().toMap

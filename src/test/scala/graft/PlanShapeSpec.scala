@@ -53,6 +53,18 @@ class PlanShapeSpec extends SparkSpec {
     assert(counter <= 1, s"SELECT 1 counter ran $counter jobs")
   }
 
+  test("a warm change-feed pass runs each merge in 4 jobs") {
+    def pass(): Unit = q("q_stream_changefeed").write.format("noop").mode("overwrite").save()
+    pass()
+    // the commit (2), each merge's delta pass (2: its shuffle and the
+    // checkpoint that also folds the key spans) and write (2: the base
+    // side's shuffle and the write; the checkpointed delta keeps its key
+    // partitioning), and the fold (3). The 3 change-feed batches run
+    // under the stream's own job group, which jobsDuring does not count
+    val jobs = jobsDuring(pass())
+    assert(jobs <= 13, s"q_stream_changefeed ran $jobs jobs")
+  }
+
   test("dim-dim join is a broadcast hash join") {
     val p = planString("q_join_broadcast")
     assert(p.contains("BroadcastHashJoin"), p)

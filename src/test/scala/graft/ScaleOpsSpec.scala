@@ -70,13 +70,13 @@ class ScaleOpsSpec extends SparkSpec {
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .as[(Long, Long, Long)].collect().sortBy(e => (e._3, e._2))
     val mid = ev(ev.length / 2)._3
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val dir = tempDir("graft_sess")
     ev.filter(_._3 <= mid).toSeq.toDF("user_id", "event_id", "ts_us")
       .coalesce(1).write.parquet(s"$dir/batch=0")
     ev.filter(_._3 > mid).toSeq.toDF("user_id", "event_id", "ts_us")
       .coalesce(1).write.parquet(s"$dir/batch=1")
     // flatten into one dir of two files (the stream reads files in order)
-    val flat = java.nio.file.Files.createTempDirectory("graft_sess_flat").toString
+    val flat = tempDir("graft_sess_flat")
     Seq(0, 1).foreach { b =>
       val src = new java.io.File(s"$dir/batch=$b").listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath

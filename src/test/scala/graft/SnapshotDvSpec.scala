@@ -13,7 +13,7 @@ class SnapshotDvSpec extends SparkSpec {
   import spark.implicits._
 
   private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_dv_spec").toString
+    tempDir("graft_dv_spec")
 
   private def withDv[A](body: => A): A = {
     spark.conf.set("spark.graft.snapshot.dvEnabled", "true")

@@ -12,7 +12,7 @@ class SnapshotPartSpecSpec extends SparkSpec {
   import spark.implicits._
 
   private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_pspec_spec").toString
+    tempDir("graft_pspec_spec")
 
   private def manifestText(dir: String, v: Long): String =
     new String(java.nio.file.Files.readAllBytes(

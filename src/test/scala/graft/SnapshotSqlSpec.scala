@@ -10,7 +10,7 @@ class SnapshotSqlSpec extends SparkSpec {
   import spark.implicits._
 
   private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_sql_spec").toString
+    tempDir("graft_sql_spec")
 
   private def manifestText(dir: String, v: Long): String =
     new String(java.nio.file.Files.readAllBytes(

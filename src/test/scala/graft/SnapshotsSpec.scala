@@ -11,7 +11,7 @@ class SnapshotsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_snap_spec").toString
+    tempDir("graft_snap_spec")
 
   private def manifestText(dir: String, v: Long): String =
     new String(java.nio.file.Files.readAllBytes(
@@ -837,7 +837,7 @@ class SnapshotsSpec extends SparkSpec {
     val factRows = (0 until 20).flatMap(p =>
       (0 until 3).map(i => (f"p$p%02d", p * 10L + i)))
     Snapshots.commit(spark, dir, factRows.toDF("part", "x"), "part")
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_snap_dim").toString
+    val dimDir = tempDir("graft_snap_dim")
     (0 until 20).map(p => (f"p$p%02d", if (p % 7 == 0) "keep" else "drop"))
       .toDF("part", "cls").write.mode("overwrite").parquet(dimDir)
     val fact = Snapshots.read(spark, dir, "part")

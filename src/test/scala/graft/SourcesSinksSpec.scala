@@ -7,11 +7,7 @@ import org.apache.spark.sql.functions._
 /** Source/sink round-trips: parquet (partitioned), csv, json, text dir. */
 class SourcesSinksSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
-    d.toFile.deleteOnExit()
-    d.resolve("out").toString
-  }
+  private def tmp(name: String): String = tempDir(s"graft_$name") + "/out"
 
   test("partitioned parquet sink round-trips and prunes partitions") {
     val li = Tables.lineitem(spark, sf)
@@ -75,7 +71,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("text-dir source reads line-per-row like the reference input format") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_text").toFile
+    val dir = new java.io.File(tempDir("graft_text"))
     java.nio.file.Files.writeString(new java.io.File(dir, "a.txt").toPath, "l1\nl2\n")
     java.nio.file.Files.writeString(new java.io.File(dir, "b.txt").toPath, "l3\n")
     assert(Tables.textDir(spark, dir.getAbsolutePath).count() == 3)

@@ -11,6 +11,9 @@ trait SparkSpec extends AnyFunSuite {
 
   val sf: String = "/root/testdata/sf0.001"
 
+  /** [[SparkSpec.tempDir]] */
+  def tempDir(prefix: String): String = SparkSpec.tempDir(prefix)
+
   def q(name: String): org.apache.spark.sql.DataFrame =
     SparkEntry.queries(name)(spark, sf)
 
@@ -23,6 +26,14 @@ trait SparkSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Janino compilations (generated classes; driver and local tasks
+    * alike) `body` runs */
+  def compilesDuring(body: => Unit): Long = {
+    val c0 = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
   }
 
   /** Spark jobs `body` launches on this thread. Its jobs carry a fresh
@@ -55,5 +66,49 @@ trait SparkSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The physical plan descriptions of the SQL executions started
+    * while `body` runs, in order. Read once [[jobsDuring]]'s sentinel
+    * has been seen: this listener sits on the same bus queue, ahead of
+    * it, so every earlier execution start has reached it. */
+  def plansDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case st: SparkListenerSQLExecutionStart => plans.add(st.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      jobsDuring(body)
+      plans.toArray(Array.empty[String]).toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+}
+
+object SparkSpec {
+  private val made = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+
+  Runtime.getRuntime.addShutdownHook(new Thread(() => {
+    // a link is removed, never followed
+    def rm(f: java.io.File): Unit = {
+      if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+        Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    made.forEach(rm(_))
+  }))
+
+  /** A fresh directory under the system temp dir, named `prefix` plus a
+    * random suffix. It is deleted, with everything in it, when the JVM
+    * exits. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    made.add(d)
+    d.toString
   }
 }

@@ -26,8 +26,7 @@ class StreamLifecycleSpec extends SparkSpec {
 
   /** one parquet file of (user_id, event_id, ts_us) rows */
   private def eventsDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lifecycle").toString
-    graft.operators.Sampling.deleteOnExit(dir)
+    val dir = tempDir("graft_lifecycle")
     Seq((1L, 1L, 0L), (1L, 2L, 60000000L), (1L, 3L, 90000000000L),
       (2L, 4L, 0L), (2L, 5L, 90000000000L))
       .toDF("user_id", "event_id", "ts_us").coalesce(1)
@@ -42,6 +41,41 @@ class StreamLifecycleSpec extends SparkSpec {
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(closed == Set((1L, 1L, 2L, 0L), (2L, 1L, 1L, 0L)))
     }
+  }
+
+  test("a stream query leaves the caller's conf as it found it") {
+    Streaming.defs.foreach { d =>
+      // the first run may make the engine's once-per-session settings
+      // (the stats commit protocol, the legacy parquet flag); the conf
+      // is compared around the second
+      q(d.name).collect()
+      val conf = spark.conf.getAll
+      q(d.name).collect()
+      val after = spark.conf.getAll
+      assert(after == conf, s"${d.name} changed the conf: " +
+        s"${(after.toSet diff conf.toSet) ++ (conf.toSet diff after.toSet)}")
+    }
+  }
+
+  test("a second identical stream run compiles no generated code") {
+    val dir = eventsDir()
+    val schema = spark.read.parquet(dir).schema
+    def counts(): Set[(Long, Long, Long)] =
+      Streaming.toMemory(spark.readStream.schema(schema).parquet(dir)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n"), max("event_id").as("last")), "complete")
+        .as[(Long, Long, Long)].collect().toSet
+    def late(): Long =
+      Streaming.foldBatches(spark.readStream.schema(schema).parquet(dir), 0L) {
+        (n, batch, _) => n + batch.filter(col("ts_us") > 0L).count()
+      }._1
+    val (want, wantLate) = (counts(), late())
+    assert(want == Set((1L, 3L, 3L), (2L, 2L, 5L)) && wantLate == 3L)
+    // each stream query runs in a session clone of its own; its tasks
+    // must still share one class loader, or the codegen cache (keyed by
+    // loader and code) misses on every run
+    assert(compilesDuring(assert(counts() == want)) == 0)
+    assert(compilesDuring(assert(late() == wantLate)) == 0)
   }
 
   test("foldBatches times out a wedged micro-batch and stops its query") {

@@ -53,8 +53,8 @@ class StreamingRobustnessSpec extends SparkSpec {
     // starts a NEW query on the SAME checkpoint after file B appears. If
     // state/progress did not recover, the final complete-mode counts
     // would cover only file B.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt_src")
+    val ckpt = tempDir("graft_ckpt")
     def writeFile(rows: Seq[String]): Unit =
       rows.toDF("event_type").coalesce(1).write
         .mode("append").parquet(dir)
@@ -277,7 +277,7 @@ class StreamingRobustnessSpec extends SparkSpec {
 
   test("streamQuantile on an EMPTY topic returns an empty report, not an NPE") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_sf").toString
+    val dir = tempDir("graft_empty_sf")
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -296,7 +296,7 @@ class StreamingRobustnessSpec extends SparkSpec {
     // API trained on the static split, scoring the arriving split
     val docs = graft.sources.Tables.documents(spark, sf)
     val arriving = docs.filter(col("doc_id") % 3 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_clf").toString
+    val dir = tempDir("graft_clf")
     arriving.repartition(3).write.mode("overwrite").parquet(dir)
     val (multi, applied) = Streaming.streamClassifierCounted(
       spark, sf, dir, "*.parquet", maxFilesPerTrigger = 1)
@@ -319,7 +319,7 @@ class StreamingRobustnessSpec extends SparkSpec {
 
   test("streamSnapshot: versioned ingest — one version per batch, monotone history, fixpoint tail") {
     val docs = graft.sources.Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssnap").toString
+    val dir = tempDir("graft_ssnap")
     docs.repartition(3).write.mode("overwrite").parquet(dir)
     // single-batch run FIRST, so the latest table dir afterwards is the
     // multi-batch run's history
@@ -386,8 +386,8 @@ class StreamingRobustnessSpec extends SparkSpec {
 
   test("row-level changefeed source: exact images per version, OPTIMIZE silent, checkpointed restart exactly once") {
     import graft.sources.Snapshots
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdfrow_tbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdfrow_ckpt").toString
+    val dir = tempDir("graft_cdfrow_tbl")
+    val ckpt = tempDir("graft_cdfrow_ckpt")
     val v1 = Snapshots.commit(spark, dir,
       Seq(("a", 1L, 10L), ("a", 2L, 20L), ("b", 7L, 70L))
         .toDF("part", "k", "v").repartition(4),
@@ -436,8 +436,8 @@ class StreamingRobustnessSpec extends SparkSpec {
 
   test("changefeed source: per-version offsets, OPTIMIZE emits nothing, checkpointed restart serves each version exactly once") {
     import graft.sources.Snapshots
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdf_tbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdf_ckpt").toString
+    val dir = tempDir("graft_cdf_tbl")
+    val ckpt = tempDir("graft_cdf_ckpt")
     val v1 = Snapshots.commit(spark, dir,
       Seq(("a", 1L), ("a", 2L), ("b", 10L)).toDF("part", "x").repartition(4),
       "part")
@@ -498,8 +498,8 @@ class StreamingRobustnessSpec extends SparkSpec {
     // versions' rows served null-filled (the batch read's own rule).
     // No manual re-seed, no checkpoint deletion, totals exact.
     import graft.sources.Snapshots
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdfw_tbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdfw_ckpt").toString
+    val dir = tempDir("graft_cdfw_tbl")
+    val ckpt = tempDir("graft_cdfw_ckpt")
     Snapshots.commit(spark, dir,
       Seq(("a", 1L), ("b", 10L)).toDF("part", "x"), "part")
     val got1 = java.util.Collections.synchronizedList(
@@ -552,7 +552,7 @@ class StreamingRobustnessSpec extends SparkSpec {
     // a single batch and as the batch query — including the doubles
     // (micro-unit rounding happens once at read-out, never per batch)
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_edrift").toString
+    val dir = tempDir("graft_edrift")
     emb.repartition(3).write.mode("overwrite").parquet(dir)
     val (multi, applied) = graft.streaming.Streaming
       .streamDriftEmbeddingCounted(spark, sf, dir, "*.parquet", 1)
@@ -579,7 +579,7 @@ class StreamingRobustnessSpec extends SparkSpec {
     // batch restatement of the drop rule
     val docs = graft.sources.Tables.documents(spark, sf)
     val arriving = docs.filter(col("doc_id") % 3 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_contain").toString
+    val dir = tempDir("graft_contain")
     arriving.repartition(3).write.mode("overwrite").parquet(dir)
     val (multi, applied) = Streaming.streamContainmentCounted(
       spark, sf, dir, "*.parquet", maxFilesPerTrigger = 1)

@@ -10,11 +10,7 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmpDir(name: String): String = tempDir(s"graft_$name")
 
   private val fixtureTables: Seq[String] =
     new java.io.File(sf).list().toSeq.filter(_.endsWith(".parquet"))

@@ -15,7 +15,7 @@ class WatermarkSpec extends SparkSpec {
   private def ts(min: Long) = new java.sql.Timestamp(min * 60000L)
 
   test("late event beyond the watermark is dropped; closed windows emit once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wm").toString
+    val dir = tempDir("graft_wm")
     // batch 0: on-time events up to t=210min -> watermark 150min after it
     Seq((1L, ts(10)), (2L, ts(20)), (3L, ts(70)), (4L, ts(210)))
       .toDF("event_id", "ts").coalesce(1).write.parquet(s"$dir/f0")
@@ -26,7 +26,7 @@ class WatermarkSpec extends SparkSpec {
     // two batches back -> dropped) plus an on-time event
     Seq((5L, ts(30)), (7L, ts(250)))
       .toDF("event_id", "ts").coalesce(1).write.parquet(s"$dir/f2")
-    val flat = java.nio.file.Files.createTempDirectory("graft_wm_flat").toString
+    val flat = tempDir("graft_wm_flat")
     Seq(0, 1, 2).foreach { b =>
       val src = new java.io.File(s"$dir/f$b").listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath
