@@ -3,8 +3,10 @@ package graft.api
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.Exact.h60
 import graft.functions.MinHashSig.minhash
+import graft.functions.{TokenSplit, TokenWindows}
 import graft.functions.VectorFunctions.cosine
 
 /** The engine's user-facing library surface: every pipeline operator as a
@@ -45,23 +47,24 @@ object Graft {
   }
 
   /** lower-cased whitespace tokens, empties dropped — the engine's one
-    * tokenizer (lambda-free: no interpreted higher-order function per
-    * row). A token never holds a space, which [[ngrams]] relies on. */
+    * tokenizer: Spark's own `lower`, then the native [[TokenSplit]] byte
+    * scan, which cuts at runs of `[ \t\n\x0B\f\r]` (Java's `\s`) exactly
+    * as `array_remove(split(lower(c), "\\s+"), "")` does. A token never
+    * holds a space, which [[ngrams]] relies on. */
   def tokens(c: Column): Column =
-    array_remove(split(lower(c), "\\s+"), "")
+    Bridge.column(TokenSplit(Bridge.expression(lower(c))))
 
   /** Every overlapping window of `n` consecutive tokens of the token
     * array `toks`, in order, each joined by single spaces — the engine's
-    * one n-gram window builder. Lambda-free: the tokens joined by single
-    * spaces, then one regex pass that captures `n` tokens ahead of every
-    * token start (a token never holds a space, so each capture is
-    * exactly one window). Fewer than `n` tokens (or a null array) give
-    * no match, so callers need no `size(toks) >= n` guard. */
-  def ngrams(toks: Column, n: Int): Column = {
-    require(n >= 1, s"window width must be positive: $n")
-    regexp_extract_all(concat_ws(" ", toks),
-      lit(s"(?:^| )(?=([^ ]+(?: [^ ]+){${n - 1}}))"), lit(1))
-  }
+    * one n-gram window builder: the tokens joined by single spaces
+    * (nulls skipped), then one native [[TokenWindows]] byte scan, which
+    * emits exactly what the regex
+    * `(?:^| )(?=([^ ]+(?: [^ ]+){n-1}))` captures (its Scaladoc states
+    * the contract for empty tokens and tokens that hold a space).
+    * Fewer than `n` tokens (or a null array) give no window, so callers
+    * need no `size(toks) >= n` guard. */
+  def ngrams(toks: Column, n: Int): Column =
+    Bridge.column(TokenWindows(Bridge.expression(concat_ws(" ", toks)), n))
 
   /** one `(keep..., w1, w2)` row per adjacent token pair of the token
     * array `toks` — the engine's one bigram builder: the width-2
@@ -149,7 +152,7 @@ object Graft {
   def shingleArrays(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // the empty-array filter sits ABOVE the merge: below it, the
-    // optimizer would push the whole regex under the exchange, into the
+    // optimizer would push the whole shingling under the exchange, into the
     // scan, and evaluate it twice
     docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .repartition(parts, col("doc_id"))
@@ -222,7 +225,7 @@ object Graft {
     * min-aggregate the signatures; an all-in-row variant built from
     * higher-order functions lost to it 8.4 s vs 1.4 s (r7: interpreted
     * lambdas re-evaluating the md5 per hash), but the native kernel has
-    * no lambdas, and the shingle windows are cut by one regex pass
+    * no lambdas, and the shingle windows are cut by one native byte scan
     * rather than a lambda. Measured on the 8,000-doc stretch16 corpus
     * (perfbench `corpus`, 4 cores, 10 alternating pairs) against the
     * exploded shape: 2.81 -> 0.90 s median per q_dedup_minhash, 8 -> 7

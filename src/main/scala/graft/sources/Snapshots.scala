@@ -3860,6 +3860,7 @@ object Snapshots {
       conf: org.apache.hadoop.conf.Configuration,
       file: Path, wanted: Map[String, DataType])
       : Map[String, (String, String)] = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
@@ -3875,7 +3876,11 @@ object Snapshots {
       }
       a.length < b.length
     }
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    // read options from `conf` itself: the one-argument open builds
+    // them from a fresh Hadoop Configuration, which re-parses the
+    // default resources on every call (~10 ms per written file)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
     try {
       val footer = reader.getFooter
       // per column: fold every row group's stats; ANY group with

@@ -626,7 +626,9 @@ object Streaming {
     * leaves dead cells under stale cohorts.
     *
     * Scale shape: per batch the anti-join and cohort lookup shuffle
-    * keys only (user_id / (user, week) pairs, never payloads); deltas
+    * keys only (user_id / (user, week) pairs, never payloads); the
+    * movers and insertions probe with the batch's touched users
+    * broadcast, so the pair state is never shuffled for them; deltas
     * aggregate map-side to at most |touched cells| rows before the view
     * merge; pair state is the distinct activity relation — the same
     * asymptotic state the batch triangle scans, held incrementally. */
@@ -659,15 +661,18 @@ object Streaming {
               col("new_min") < col("cohort_week"), col("new_min"))
               .otherwise(col("cohort_week")).as("new_c"))
           .localCheckpoint() // feeds retraction, insertion, cohort merge
-        // movers: every EXISTING cell migrates old cohort -> new cohort
+        // movers: every EXISTING cell migrates old cohort -> new cohort.
+        // Both joins on `affected` build it (broadcast): left to AQE,
+        // the build side follows runtime shuffle sizes, which flip from
+        // run to run at small scale, and each flip compiles new code
         val moverPairs = pairState.join(
-          affected.filter(col("old_c").isNotNull && col("new_c") < col("old_c")),
+          broadcast(affected.filter(col("old_c").isNotNull && col("new_c") < col("old_c"))),
           Seq("user_id"))
         val retract = moverPairs.select(col("old_c").as("cohort_week"),
           (col("week") - col("old_c")).as("offset_weeks"), lit(-1L).as("dn"))
         val reinsert = moverPairs.select(col("new_c").as("cohort_week"),
           (col("week") - col("new_c")).as("offset_weeks"), lit(1L).as("dn"))
-        val insert = newPairs.join(affected.select("user_id", "new_c"), "user_id")
+        val insert = newPairs.join(broadcast(affected.select("user_id", "new_c")), "user_id")
           .select(col("new_c").as("cohort_week"),
             (col("week") - col("new_c")).as("offset_weeks"), lit(1L).as("dn"))
         val delta = retract.unionByName(reinsert).unionByName(insert)

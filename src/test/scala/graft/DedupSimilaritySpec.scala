@@ -54,7 +54,7 @@ class DedupSimilaritySpec extends SparkSpec {
     (6L, "  Leading\tand   trailing \n whitespace   collapses  ")
   ).toDF("doc_id", "text")
 
-  /** the lambda formulation the regex window kernel replaced, kept here
+  /** the lambda formulation the window kernel replaced, kept here
     * as the reference it must match string for string: the old filtering
     * tokenizer, then a `transform(sequence, slice)` window at every
     * 1-based start `p` of docs with >= n tokens. (doc_id, p, shingle). */
@@ -82,7 +82,7 @@ class DedupSimilaritySpec extends SparkSpec {
   ).toDF("doc_id", "text"))
 
   test("shingleArrays holds exactly the exploded distinct shingle sets") {
-    // the regex windows must reproduce the transform(slice) reference
+    // the kernel windows must reproduce the transform(slice) reference
     // string for string — including the merge of doc 5's two rows and the
     // drop of docs 3 (< 3 tokens), 4 (null text) and 11 (n - 1 tokens)
     val docs = windowDocs(3)

@@ -163,12 +163,23 @@ class PlanShapeSpec extends SparkSpec {
       s"aggregate keyed on a shingle column: $keys"))
   }
 
+  test("minhash shingles are cut by the native text kernels, no regex pass") {
+    // every action's plan, the shingle checkpoint's included: tokens and
+    // windows come from TokenSplit and TokenWindows, and no split or
+    // regexp_extract_all runs java.util.regex per document
+    val plans = plansDuring(
+      q("q_dedup_minhash").write.format("noop").mode("overwrite").save())
+    val all = plans.mkString("\n")
+    assert(all.contains("tokensplit(") && all.contains("tokenwindows("), all)
+    assert("regexp_extract_all|(?<![a-z_])split\\(".r.findFirstIn(all).isEmpty, all)
+  }
+
   test("text windows and tokenizers plan no lambda function") {
-    // one tokenizer (array_remove over a split) and one window kernel (a
-    // regex pass) serve these queries: no interpreted higher-order
-    // function runs per token or per window. Their shingle relations
-    // are checkpointed in their own actions, so every execution's
-    // optimized plan is checked, not only the last.
+    // one tokenizer and one window kernel (native byte scans) serve
+    // these queries: no interpreted higher-order function runs per
+    // token or per window. Their shingle relations are checkpointed in
+    // their own actions, so every execution's optimized plan is
+    // checked, not only the last.
     import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.util.QueryExecutionListener

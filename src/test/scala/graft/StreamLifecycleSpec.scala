@@ -78,6 +78,48 @@ class StreamLifecycleSpec extends SparkSpec {
     assert(compilesDuring(assert(late() == wantLate)) == 0)
   }
 
+  /** the join operators, with their build sides, of the final (adaptive)
+    * plan of every SQL execution `body` starts, in execution order */
+  private def joinsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val plans = new java.util.concurrent.ConcurrentSkipListMap[Long, String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.put(u.executionId, u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // jobsDuring returns once the bus has delivered every event body posted
+    try jobsDuring(body) finally spark.sparkContext.removeSparkListener(listener)
+    val join = "(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin|BroadcastNestedLoopJoin)( \\w+)*".r
+    plans.values.toArray(Array.empty[String]).toSeq.map { p =>
+      join.findAllIn(p.split("== Initial Plan ==").head).mkString(", ")
+    }
+  }
+
+  test("warm q_stream_retention runs plan the same joins") {
+    // its joins on the batch's touched users build that side; left to
+    // AQE, the build side followed runtime shuffle sizes, which flipped
+    // from run to run, and each flip compiled new classes. (A count of
+    // compiles would not pin this: Spark's codegen cache is keyed by
+    // class loader and code, and whether this query's ~80 entries per
+    // run overflow a cache segment varies from JVM to JVM)
+    def run(): Unit = q("q_stream_retention").write.format("noop").mode("overwrite").save()
+    run()
+    val first = joinsDuring(run())
+    assert(first.exists(_.contains("BroadcastHashJoin Inner")), first)
+    for (i <- 2 to 4) {
+      val again = joinsDuring(run())
+      assert(again == first, s"warm run $i planned\n${again.mkString("\n")}\n" +
+        s"where warm run 1 planned\n${first.mkString("\n")}")
+    }
+  }
+
   test("foldBatches times out a wedged micro-batch and stops its query") {
     val dir = eventsDir()
     val schema = spark.read.parquet(dir).schema
