@@ -22,6 +22,7 @@ object SparkEntry {
       operators.EventsOps.defs ++
       functions.Scalars.defs ++
       functions.TextAnalysis.defs ++
+      operators.Layout.defs ++
       operators.Sampling.defs ++
       operators.Dedup.defs ++
       operators.Graph.defs ++

@@ -400,10 +400,7 @@ object Quality {
         |SELECT f.o_orderkey, f.reasons, c.n_good, c.n_quarantined
         |FROM f, c WHERE f.reasons <> ''
         |""".stripMargin) { (s, d) =>
-      val dir = "/tmp/graft_quar_viol_" +
-        java.nio.file.Paths.get(d).getFileName.toString +
-        "_" + s.sparkContext.applicationId
-      Sampling.deleteOnExit(dir)
+      val dir = scratchDir(s, d, "quar_viol")
       val o = orders(s, d).select(
         col("o_orderkey"),
         when(col("o_orderkey") % 89 === 0, lit("X"))

@@ -135,6 +135,29 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
+  private val scratchDirs = ConcurrentHashMap.newKeySet[String]()
+
+  /** The session's scratch directory `name` for the scale factor at `d`:
+    * `/tmp/graft_<name>_<sf dir name>_<app id>`. The app id is unique per
+    * SparkSession, so two concurrent sessions on one scale factor (a
+    * bench and a verify) never race one overwrite against the other's
+    * read-back. It is deleted, with everything in it, when the JVM
+    * exits; one shutdown hook per directory, however often it is asked
+    * for. */
+  def scratchDir(s: SparkSession, d: String, name: String): String = {
+    val dir = s"/tmp/graft_${name}_${java.nio.file.Paths.get(d).getFileName}_" +
+      s.sparkContext.applicationId
+    if (scratchDirs.add(dir))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => {
+        def rm(f: java.io.File): Unit = {
+          Option(f.listFiles).foreach(_.foreach(rm))
+          f.delete(): Unit
+        }
+        rm(new java.io.File(dir))
+      }))
+    dir
+  }
+
   /** Reference-style source: directory of plain text files, one row per line
     * (`spark.read.text`), mirroring `datanode.py:598-603`'s file reader. */
   def textDir(s: SparkSession, dir: String): DataFrame = s.read.text(dir)

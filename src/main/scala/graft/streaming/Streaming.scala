@@ -843,13 +843,10 @@ object Streaming {
       maxFilesPerTrigger: Int): (DataFrame, Int, String) = withStatePartitions(s, 4) {
     import graft.sources.Snapshots
     val docs = graft.sources.Tables.documents(s, d)
-    // fresh per-run table dir (nanoTime beyond the session id: repeat
-    // runs in one session — bench passes — must not stack onto one
-    // history, or version numbers would depend on pass count)
-    val dir = "/tmp/graft_stream_snap_" +
-      java.nio.file.Paths.get(d).getFileName.toString +
-      "_" + s.sparkContext.applicationId + "_" + System.nanoTime()
-    graft.operators.Sampling.deleteOnExit(dir)
+    // fresh per-run table dir in the session's scratch dir: repeat runs
+    // in one session — bench passes — must not stack onto one history,
+    // or version numbers would depend on pass count
+    val dir = runDir(s, d, "stream_snap")
     def fold(df: DataFrame): DataFrame = df
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
@@ -925,34 +922,27 @@ object Streaming {
   def streamChangefeed(s: SparkSession, d: String): DataFrame =
     streamChangefeedCounted(s, d, 1)._1
 
+  /** A fresh directory for one run's table, inside the session's
+    * scratch dir `name` (so one exit hook covers every run). */
+  private def runDir(s: SparkSession, d: String, name: String): String =
+    graft.sources.Tables.scratchDir(s, d, name) + "/" + System.nanoTime()
+
+  /** The change-feed consumers' table, in a fresh [[runDir]]: the
+    * q_layout_merge CDC fold (3 versions via the file-grain merge), then
+    * one compaction-as-version AFTER the fold — rewritten files carry
+    * their dataVersion, so a feed must not emit a single row for it.
+    * Returns the table dir. */
+  private def cdcFixture(s: SparkSession, d: String, name: String): String = {
+    val dir = runDir(s, d, name)
+    graft.operators.Layout.cdcFold(s, d, dir, 3)
+    graft.sources.Snapshots.optimize(s, dir, "part")
+    dir
+  }
+
   /** returns (fold of the feed, batches observed, this run's table dir) */
   private[graft] def streamChangefeedCounted(s: SparkSession, d: String,
       maxVersionsPerBatch: Int): (DataFrame, Int, String) = {
-    import graft.sources.Snapshots
-    val ev = graft.sources.Tables.events(s, d)
-      .select(col("user_id"), col("event_id"), col("value").as("v"))
-    // fresh per-run table dir (nanoTime beyond the session id: repeat
-    // runs in one session must not stack onto one history)
-    val dir = "/tmp/graft_stream_cdf_" +
-      java.nio.file.Paths.get(d).getFileName.toString +
-      "_" + s.sparkContext.applicationId + "_" + System.nanoTime()
-    graft.operators.Sampling.deleteOnExit(dir)
-    def batch(b: Int) = ev
-      .filter(pmod(col("event_id"), lit(3)) === b)
-      .groupBy("user_id")
-      .agg(max("event_id").as("event_id"),
-        max_by(col("v"), col("event_id")).as("v"))
-      .withColumn("part", (col("user_id") % 4).cast("string"))
-      .withColumn("op",
-        when(pmod(col("event_id"), lit(29)) === 0, lit("D"))
-          .otherwise(lit("U")))
-    Snapshots.commit(s, dir, batch(0).filter(col("op") =!= "D").drop("op"),
-      "part", statsColumns = Seq("user_id"))
-    Snapshots.merge(s, dir, "part", "user_id", batch(1))
-    Snapshots.merge(s, dir, "part", "user_id", batch(2))
-    // compaction-as-version AFTER the fold: rewritten files carry their
-    // dataVersion, so the feed below must not emit a single row for it
-    Snapshots.optimize(s, dir, "part")
+    val dir = cdcFixture(s, d, "stream_cdf")
     val (feed, batches) = foldBatches(s.readStream.format("graft_snapshot_cdf")
         .option("path", dir).option("partCol", "part")
         .option("maxVersionsPerBatch", maxVersionsPerBatch.toString)
@@ -992,27 +982,7 @@ object Streaming {
     * re-derive state per partition instead). */
   private[graft] def streamCdfRowsCounted(s: SparkSession, d: String,
       maxVersionsPerBatch: Int): (DataFrame, Int, String) = {
-    import graft.sources.Snapshots
-    val ev = graft.sources.Tables.events(s, d)
-      .select(col("user_id"), col("event_id"), col("value").as("v"))
-    val dir = "/tmp/graft_stream_cdfrows_" +
-      java.nio.file.Paths.get(d).getFileName.toString +
-      "_" + s.sparkContext.applicationId + "_" + System.nanoTime()
-    graft.operators.Sampling.deleteOnExit(dir)
-    def batch(b: Int) = ev
-      .filter(pmod(col("event_id"), lit(3)) === b)
-      .groupBy("user_id")
-      .agg(max("event_id").as("event_id"),
-        max_by(col("v"), col("event_id")).as("v"))
-      .withColumn("part", (col("user_id") % 4).cast("string"))
-      .withColumn("op",
-        when(pmod(col("event_id"), lit(29)) === 0, lit("D"))
-          .otherwise(lit("U")))
-    Snapshots.commit(s, dir, batch(0).filter(col("op") =!= "D").drop("op"),
-      "part", statsColumns = Seq("user_id"))
-    Snapshots.merge(s, dir, "part", "user_id", batch(1))
-    Snapshots.merge(s, dir, "part", "user_id", batch(2))
-    Snapshots.optimize(s, dir, "part")
+    val dir = cdcFixture(s, d, "stream_cdfrows")
     val (feed, batches) = foldBatches(s.readStream.format("graft_snapshot_cdf")
         .option("path", dir).option("partCol", "part")
         .option("rowLevel", "true").option("keyCol", "user_id")

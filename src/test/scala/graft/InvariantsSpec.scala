@@ -14,6 +14,15 @@ class InvariantsSpec extends SparkSpec {
     assert(noOracle.isEmpty, s"rows-only checks remain: $noOracle")
   }
 
+  test("family = file: the layout queries are exactly Layout.defs") {
+    val layout = operators.Layout.defs.map(_.name)
+    assert(layout.forall(_.startsWith("q_layout_")),
+      layout.filterNot(_.startsWith("q_layout_")))
+    val registered = SparkEntry.defs.map(_.name).filter(_.startsWith("q_layout_"))
+    assert(registered.sorted == layout.sorted,
+      s"q_layout_ queries outside Layout.defs: ${registered.diff(layout)}")
+  }
+
   test("oracle hygiene: every FROM/JOIN reference resolves to a CTE or base table") {
     // Guards against oracle-string construction bugs (the r11 val-init
     // ordering slip glued a Scala null into the CTE chain: the SQL

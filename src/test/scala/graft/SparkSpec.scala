@@ -28,6 +28,21 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  def tempViews: Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  def activeStreams: Set[String] = spark.streams.active.map(_.id.toString).toSet
+
+  /** `body`, then the session must hold the views and active streams it
+    * held before */
+  def leavesNothing[T](body: => T): T = {
+    val (views, streams) = (tempViews, activeStreams)
+    val out = body
+    assert(tempViews == views, s"views left behind: ${tempViews -- views}")
+    assert(activeStreams == streams, s"streams left active: ${activeStreams -- streams}")
+    out
+  }
+
   /** Janino compilations (generated classes; driver and local tasks
     * alike) `body` runs */
   def compilesDuring(body: => Unit): Long = {

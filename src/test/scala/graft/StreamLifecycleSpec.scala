@@ -9,21 +9,6 @@ import org.apache.spark.sql.functions._
 class StreamLifecycleSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tempViews: Set[String] =
-    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
-
-  private def activeStreams: Set[String] = spark.streams.active.map(_.id.toString).toSet
-
-  /** `body`, then the session must hold the views and active streams it
-    * held before */
-  private def leavesNothing[T](body: => T): T = {
-    val (views, streams) = (tempViews, activeStreams)
-    val out = body
-    assert(tempViews == views, s"views left behind: ${tempViews -- views}")
-    assert(activeStreams == streams, s"streams left active: ${activeStreams -- streams}")
-    out
-  }
-
   /** one parquet file of (user_id, event_id, ts_us) rows */
   private def eventsDir(): String = {
     val dir = tempDir("graft_lifecycle")
@@ -118,6 +103,16 @@ class StreamLifecycleSpec extends SparkSpec {
       assert(again == first, s"warm run $i planned\n${again.mkString("\n")}\n" +
         s"where warm run 1 planned\n${first.mkString("\n")}")
     }
+  }
+
+  test("a table-writing stream query's runs each get their own table in one session scratch dir") {
+    val scratch = graft.sources.Tables.scratchDir(spark, sf, "stream_cdf")
+    val dirs = Seq(1, 2).map(_ => Streaming.streamChangefeedCounted(spark, sf, 1)._3)
+    assert(dirs.distinct.size == 2, dirs)
+    dirs.foreach(d => assert(new java.io.File(d).getParent == scratch, d))
+    // each run's history is its own: the second did not stack onto the first
+    val versions = dirs.map(graft.sources.Snapshots.currentVersion(spark, _))
+    assert(versions.distinct.size == 1, versions)
   }
 
   test("foldBatches times out a wedged micro-batch and stops its query") {
